@@ -215,15 +215,69 @@ def pyramid_up(
 
     Missing children fill with ``fill`` (0 for count layers; NaN keeps
     NoData for continuous layers). Input tiles must share one (zoom,
-    width, height); output halves the zoom's tile count, same tile size.
+    width, height) — the Arrow kernels raise ValueError on a batch that
+    mixes sizes, holds an odd size, a NULL ``cells`` row or a list whose
+    length is not width*height; output halves the zoom's tile count,
+    same tile size.
     Iterating z..1 materializes the whole pyramid in log2 rounds, each
     a narrow shuffle of quarter-size quadrants (¼ the naive volume of
     re-keying raw points per level)."""
     if agg not in ("sum", "mean", "max"):
         raise ValueError("agg must be one of ['max', 'mean', 'sum']")
+    if impl not in ("arrow", "sql"):
+        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
     if impl == "arrow":
         return _pyramid_up_arrow(tiles, agg, fill)
     return _pyramid_up_sql(tiles, agg, fill)
+
+
+def _list_rows(col, size: int):
+    """(null_mask, offsets, flat float64 values) of an Arrow list column.
+    Built from the raw buffers so NaN elements stay NaN (pandas
+    round-trips would coerce them to null). Raises ValueError when a
+    non-NULL row's length (per the offsets) is not ``size``."""
+    mask = np.asarray(col.is_null())
+    offs = np.asarray(col.offsets)
+    lens = np.diff(offs)
+    bad = ~mask & (lens != size)
+    if bad.any():
+        i = int(np.argmax(bad))
+        raise ValueError(f"list row {i} holds {lens[i]} values, expected {size}")
+    vals = np.asarray(col.values, dtype=np.float64)
+    return mask, offs, vals
+
+
+def _list_col(arr2d):
+    """numpy (n, k) float64 -> pa list<double> rows, NaN-preserving.
+    Offsets are computed in int64; a list<double> column holds int32
+    offsets, so more than 2**31 - 1 values raise instead of wrapping."""
+    import pyarrow as pa
+
+    n, k = arr2d.shape
+    if n * k >= 2**31:
+        raise ValueError(
+            f"{n} rows x {k} values overflow int32 list offsets; "
+            "use smaller Arrow batches (spark.sql.execution.arrow."
+            "maxRecordsPerBatch)")
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(n + 1, dtype=np.int64) * k, type=pa.int32()),
+        pa.array(arr2d.reshape(-1), type=pa.float64()))
+
+
+def _batch_tile_size(b) -> tuple[int, int]:
+    """The one (width, height) of every row in an Arrow batch. The
+    kernels reshape whole batches, so a mixed or odd size would silently
+    corrupt neighbouring tiles; both raise ValueError instead."""
+    w = np.asarray(b.column("width"))
+    h = np.asarray(b.column("height"))
+    if (w != w[0]).any() or (h != h[0]).any():
+        raise ValueError(
+            "pyramid_up requires one tile size per batch, got "
+            f"{sorted(set(zip(w.tolist(), h.tolist())))} (width, height)")
+    if w[0] % 2 or h[0] % 2:
+        raise ValueError(
+            f"pyramid_up requires even tile size, got {int(w[0])}x{int(h[0])}")
+    return int(w[0]), int(h[0])
 
 
 def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
@@ -236,33 +290,17 @@ def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
 
     sql_schema = _pyramid_up_sql(tiles, agg, fill).schema  # analysis only
 
-    def _list_rows(col):
-        """(null_mask, offsets, flat float64 values) of a list column.
-        Built from the raw buffers so NaN elements stay NaN (pandas
-        round-trips would coerce them to null)."""
-        mask = np.asarray(col.is_null())
-        offs = np.asarray(col.offsets)
-        vals = np.asarray(col.values, dtype=np.float64)
-        return mask, offs, vals
-
-    def _list_col(arr2d):
-        """numpy (n, k) float64 -> pa list<double> rows, NaN-preserving."""
-        n, k = arr2d.shape
-        return pa.ListArray.from_arrays(
-            pa.array(np.arange(n + 1, dtype=np.int32) * k),
-            pa.array(arr2d.reshape(-1), type=pa.float64()))
-
     def down_kernel(batches):
         for b in batches:
             n = b.num_rows
             if not n:
                 continue
-            w = b.column("width")[0].as_py()
-            h = b.column("height")[0].as_py()
-            if w % 2 or h % 2:
-                raise ValueError("pyramid_up requires even tile size")
-            _, _, vals = _list_rows(b.column("cells"))
-            cells = vals.reshape(n, h, w)
+            w, h = _batch_tile_size(b)
+            mask, offs, vals = _list_rows(b.column("cells"), h * w)
+            if mask.any():
+                raise ValueError(
+                    f"pyramid_up: NULL cells in row {int(np.argmax(mask))}")
+            cells = vals[offs[0]:offs[-1]].reshape(n, h, w)
             a = cells[:, 0::2, 0::2]
             bb = cells[:, 0::2, 1::2]
             c = cells[:, 1::2, 0::2]
@@ -331,8 +369,7 @@ def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
             nrow = b.num_rows
             if not nrow:
                 continue
-            w = b.column("width")[0].as_py()
-            h = b.column("height")[0].as_py()
+            w, h = _batch_tile_size(b)
             h2, w2 = h // 2, w // 2
             out = np.empty((nrow, h, w), dtype=np.float64)
             missing = np.full((h2, w2), fill, dtype=np.float64)
@@ -341,7 +378,7 @@ def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
                      "01": (slice(h2, None), slice(None, w2)),
                      "11": (slice(h2, None), slice(w2, None))}
             for k, (rs, cs) in views.items():
-                mask, offs, vals = _list_rows(b.column(f"q_{k}"))
+                mask, offs, vals = _list_rows(b.column(f"q_{k}"), h2 * w2)
                 for i in range(nrow):
                     out[i, rs, cs] = (missing if mask[i] else
                                       vals[offs[i]:offs[i + 1]]

@@ -5,6 +5,7 @@ flagship path (no sort-merge), and whole-stage codegen around the tile
 math. A regression in any of these silently costs 10-100x at 100 TB."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from geotrellis_server_spark.operators import spatial_join, tiling
 from geotrellis_server_spark.sources import synth
@@ -162,3 +163,65 @@ def test_od_flows_single_user_exchange_then_partial_agg(spark):
     # partial_count before the final agg = map-side combine present
     assert "partial_count" in plan or "partial_" in plan
     assert plan.count("Exchange hashpartitioning") == 2  # user + flow key
+
+
+# ---------------------------------------------------------------------------
+# extract_geometry parses each doc's WKT once: the parse (substring_index)
+# sits in ONE operator of every docs-path plan. With a named_struct
+# projection alone, a join's inferred isnotnull(lon/lat) filters are pushed
+# down with the whole parse chain inlined into a Filter (and the scan's
+# DataFilters), so every row is parsed twice.
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def docs_parquet(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("docs") / "docs.parquet")
+    synth.docs(spark, 2000).write.parquet(path)
+    return path
+
+
+def _parse_ops(plan: str) -> list:
+    """The plan operators (one per line) that evaluate the WKT parse."""
+    return [line for line in plan.splitlines() if "substring_index" in line]
+
+
+def test_pip_job_parses_geometry_once(spark, docs_parquet):
+    d = synth.extract_geometry(spark.read.parquet(docs_parquet))
+    joined = spatial_join.pip_join_rect(d, synth.zone_grid(spark))
+    out = tiling.assign_tiles(joined, 12).groupBy("zone_id", "tile_x", "tile_y").agg(
+        F.count("*").alias("n")
+    )
+    plan = _plan(out)
+    assert len(_parse_ops(plan)) == 1, "\n".join(_parse_ops(plan))
+    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
+    assert "spans:array<struct<kind:string,text:string>>" in read_schema
+    assert "media_ref" not in read_schema
+
+
+def test_knn_ring_join_parses_geometry_once(spark, docs_parquet, monkeypatch):
+    from geotrellis_server_spark.operators import knn
+
+    src = spark.read.parquet(docs_parquet)
+    # each ring's top-k is persisted; record the plan of the first ring
+    # join (docs ⨝ broadcast(cand)) as it is persisted
+    plans = []
+    cls = type(src)
+    persist = cls.persist
+
+    def recording_persist(self, *a, **kw):
+        plans.append(_plan(self))
+        return persist(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "persist", recording_persist)
+    queries = spark.createDataFrame(
+        [(0, -74.0, 40.0), (1, 10.0, 50.0), (2, 100.0, -20.0)],
+        "query_id BIGINT, qlon DOUBLE, qlat DOUBLE")
+    knn.knn_join_bulk(synth.extract_geometry(src), queries, k=3, res=4)
+    assert plans and "BroadcastHashJoin" in plans[0]
+    assert len(_parse_ops(plans[0])) == 1, "\n".join(_parse_ops(plans[0]))
+
+
+def test_tile_counts_parses_geometry_once(spark, docs_parquet):
+    d = synth.extract_geometry(spark.read.parquet(docs_parquet))
+    assert len(_parse_ops(_plan(tiling.tile_counts(d, 8)))) == 1

@@ -67,3 +67,25 @@ def test_hot_clusters_present(spark):
     g = synth.extract_geometry(synth.docs(spark, 4000))
     near = g.filter("abs(lon - (-74)) <= 1.1 AND abs(lat - 40) <= 1.1").count()
     assert near > 200  # one cluster alone holds ~ n/12
+
+
+def test_extract_geometry_keeps_every_row(spark):
+    """No geo span, a NULL spans array and an empty one each still give
+    exactly one row, with NULL lon/lat and spans passed through as is."""
+    spans_t = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    d = spark.createDataFrame(
+        [("no-geo", [("text", "alpha", "", 0), ("media", "", "ref://1", 1)]),
+         ("null", None),
+         ("empty", []),
+         ("geo", [("text", "beta", "", 0), ("geo", "POINT(1.5 -2.25)", "", 1)])],
+        f"doc_id string, spans {spans_t}",
+    )
+    g = synth.extract_geometry(d)
+    assert g.columns == ["doc_id", "spans", "lon", "lat"]
+    got = {r.doc_id: (r.spans, r.lon, r.lat) for r in g.collect()}
+    assert g.count() == 4 and len(got) == 4
+    want = {r.doc_id: r.spans for r in d.collect()}
+    assert {k: v[0] for k, v in got.items()} == want
+    for k in ("no-geo", "null", "empty"):
+        assert got[k][1:] == (None, None), k
+    assert got["geo"][1:] == (1.5, -2.25)

@@ -198,6 +198,83 @@ def test_pyramid_up_rejects_odd_tile_size(spark):
         pyramid_up(df).collect()
 
 
+def test_pyramid_up_rejects_unknown_impl(spark):
+    from geotrellis_server_spark.operators.tiling import pyramid_up
+
+    df = spark.createDataFrame(
+        [(3, 0, 0, 2, 2, [0.0] * 4)],
+        "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>",
+    )
+    with pytest.raises(ValueError, match="impl"):
+        pyramid_up(df, impl="sq1")
+
+
+def test_pyramid_up_rejects_mixed_tile_sizes_in_a_batch(spark):
+    # 4x4 and 2x8 hold the same number of cells: reshaping the batch by
+    # row 0's size used to yield corrupt quadrants without an error
+    from geotrellis_server_spark.operators.tiling import pyramid_up
+
+    df = spark.createDataFrame(
+        [(3, 0, 0, 4, 4, [1.0] * 16), (3, 1, 1, 2, 8, [2.0] * 16)],
+        "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="one tile size per batch"):
+        pyramid_up(df).collect()
+
+
+def test_pyramid_up_rejects_null_cells(spark):
+    from geotrellis_server_spark.operators.tiling import pyramid_up
+
+    df = spark.createDataFrame(
+        [(3, 0, 0, 2, 2, [1.0] * 4), (3, 1, 1, 2, 2, None)],
+        "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="NULL cells"):
+        pyramid_up(df).collect()
+
+
+def test_list_col_offsets_and_overflow():
+    from geotrellis_server_spark.operators.tiling import _list_col
+
+    col = _list_col(np.arange(6, dtype=np.float64).reshape(3, 2))
+    assert col.offsets.to_pylist() == [0, 2, 4, 6]
+    assert col.to_pylist() == [[0.0, 1.0], [2.0, 3.0], [4.0, 5.0]]
+    # 2**16 rows x 2**15 values = 2**31: int32 offsets would wrap; a
+    # zero-stride view keeps the test from allocating the values
+    huge = np.broadcast_to(np.zeros(1), (2**16, 2**15))
+    with pytest.raises(ValueError, match="int32 list offsets"):
+        _list_col(huge)
+
+
+def test_list_rows_uses_offsets_and_checks_lengths():
+    import pyarrow as pa
+
+    from geotrellis_server_spark.operators.tiling import _list_rows
+
+    col = pa.array([[1.0, 2.0], None, [3.0, float("nan")]]).slice(1)
+    mask, offs, vals = _list_rows(col, 2)
+    assert mask.tolist() == [True, False]
+    assert vals[offs[1]:offs[2]][0] == 3.0 and np.isnan(vals[offs[2] - 1])
+    with pytest.raises(ValueError, match="holds 3 values, expected 2"):
+        _list_rows(pa.array([[1.0, 2.0], [1.0, 2.0, 3.0]]), 2)
+
+
+def test_batch_tile_size_contract():
+    import pyarrow as pa
+
+    from geotrellis_server_spark.operators.tiling import _batch_tile_size
+
+    def batch(ws, hs):
+        return pa.record_batch([pa.array(ws, pa.int32()), pa.array(hs, pa.int32())],
+                               names=["width", "height"])
+
+    assert _batch_tile_size(batch([4, 4], [8, 8])) == (4, 8)
+    with pytest.raises(ValueError, match="one tile size per batch"):
+        _batch_tile_size(batch([4, 2], [4, 8]))
+    with pytest.raises(ValueError, match="even tile size"):
+        _batch_tile_size(batch([3, 3], [4, 4]))
+
+
 def test_write_pyramid_levels_and_pruning(spark, tmp_path):
     from geotrellis_server_spark.operators.tiling import (
         pyramid_up,
