@@ -82,6 +82,18 @@ def _supported_epsg() -> list:
             "proj4:+proj=utm|tmerc|lcc|laea|aea|stere|eqc|moll"]
 
 
+def _tile_png(cells, w: int, h: int, style: dict | None) -> bytes:
+    """One tile → PNG bytes: the style's colour ramp when it has
+    ``poles``, else the greyscale auto-rescale."""
+    # np.asarray maps None -> NaN for float64 directly (the NoData
+    # convention everywhere else) — no per-element loop
+    a = np.asarray(cells, dtype=np.float64).reshape(h, w)
+    poles = (style or {}).get("poles")
+    if poles:
+        return encode_png(CM.interpolated_colormap(a, poles, style.get("clip", CM.CLIP_NONE)))
+    return encode_png(CM.render_rgba(a))
+
+
 class Engine:
     def __init__(self, spark: SparkSession, layers: dict[str, Layer], catalog: DataFrame | None = None):
         self.spark = spark
@@ -97,7 +109,15 @@ class Engine:
     def get_tile_png(self, layer_name: str, z: int, x: int, y: int) -> bytes | None:
         """GetTile + style + PNG encode, memoized on the full request key.
         Returns the PNG bytes of the (z, x, y) tile, or None if the layer
-        has no tile there. The collect is a single request-sized tile.
+        has no tile there.
+
+        Only the tile's ``width, height, cells`` row is collected; the
+        style LUT and PNG encode run here, in-process, through the same
+        ``_tile_png`` that ``render_png``'s UDF calls (reference
+        Render.scala renders in the server process too). Encoding one
+        request-sized tile takes well under a millisecond, while sending
+        it through a pandas UDF adds an ArrowEvalPython stage whose Python
+        task alone costs 130-250 ms of worker start-up per request.
 
         The key carries the Layer's generation stamp (unique per instance,
         never reused — unlike id()), so replacing a layer (``set_layer``
@@ -108,9 +128,9 @@ class Engine:
         key = ("tile_png", layer_name, layer.generation, z, x, y)
 
         def compute() -> bytes | None:
-            styled = self.render_png(self.get_tile(layer_name, z, x, y), layer.style)
-            row = styled.select("png").first()
-            return bytes(row.png) if row else None
+            tile = self.get_tile(layer_name, z, x, y)
+            row = tile.select("width", "height", "cells").first()
+            return _tile_png(row.cells, row.width, row.height, layer.style) if row else None
 
         return self.request_cache.get_or(key, compute)
 
@@ -325,12 +345,25 @@ class Engine:
     # -- E4: GetFeatureInfo (point sampling, J6) ----------------------------
     def get_values(self, layer_name: str, points: list[tuple[float, float]], zoom: int) -> DataFrame:
         """Multipoint bulk sampling: points → tile-key equi-join → in-tile
-        pixel index lookup (GetFeatureInfoExtended.scala:57-105)."""
+        pixel index lookup (GetFeatureInfoExtended.scala:57-105).
+
+        The points enter as a pandas frame, which plans as a local
+        relation (``LocalTableScan``) — never as a Python RDD. A Python
+        RDD would be re-read through Python workers to build the
+        broadcast side, one job and 130-250 ms of worker start-up per
+        request; the local relation needs neither."""
+        import pandas as pd
+
         from .operators.tiling import pixel_index_sql
 
         layer = self.layers[layer_name]
+        xy = np.asarray(points, dtype=np.float64).reshape(len(points), 2)
         pts = self.spark.createDataFrame(
-            [(i, float(lo), float(la)) for i, (lo, la) in enumerate(points)],
+            pd.DataFrame({
+                "point_id": np.arange(len(xy), dtype=np.int32),
+                "lon": xy[:, 0],
+                "lat": xy[:, 1],
+            }),
             "point_id INT, lon DOUBLE, lat DOUBLE",
         )
         tiles = self._eval(layer, F.col("zoom") == zoom)
@@ -452,23 +485,15 @@ class Engine:
 
     # -- render (E1 tail): tiles → PNG bytes --------------------------------
     def render_png(self, tiles: DataFrame, style: dict | None = None) -> DataFrame:
+        """Bulk render: adds a ``png`` column to every tile row through a
+        pandas UDF. Each tile goes through ``_tile_png``, the same helper
+        ``get_tile_png`` calls in-process for a single request, so both
+        paths produce identical bytes."""
         import pandas as pd
         from pyspark.sql import types as T
 
-        poles = (style or {}).get("poles")
-        clip = (style or {}).get("clip", CM.CLIP_NONE)
-
         @F.pandas_udf(T.BinaryType())
         def to_png(cells, w_s, h_s):
-            out = []
-            for c, w, h in zip(cells, w_s, h_s):
-                # np.asarray maps None -> NaN for float64 directly (the
-                # NoData convention everywhere else) — no per-element loop
-                a = np.asarray(c, dtype=np.float64).reshape(h, w)
-                rgba = (
-                    CM.interpolated_colormap(a, poles, clip) if poles else CM.render_rgba(a)
-                )
-                out.append(encode_png(rgba))
-            return pd.Series(out)
+            return pd.Series([_tile_png(c, w, h, style) for c, w, h in zip(cells, w_s, h_s)])
 
         return tiles.withColumn("png", to_png("cells", "width", "height"))

@@ -7,8 +7,9 @@ Run: python scripts/demo_getmap.py [out.png]
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))  # the repo root
 
 from geotrellis_server_spark.engine import Engine, Layer
 from geotrellis_server_spark.grids.layout import WEBMERCATOR_BOUND as B

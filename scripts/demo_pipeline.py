@@ -10,8 +10,9 @@ Run: python scripts/demo_pipeline.py
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))  # the repo root
 
 import pyspark.sql.functions as F
 

@@ -273,3 +273,56 @@ def test_legend_png_rendering(spark):
     leg = by_name["styled"]["legend"]
     assert leg["format"] == "image/png" and leg["online_resource"].endswith(
         "styled.png")
+
+
+@pytest.fixture(scope="module")
+def render_engine(density_engine):
+    tiles = density_engine.layers["density"].tiles.filter("zoom = 3")
+    # NULL and NaN NoData cells (every third cell NULL, the next NaN)
+    holes = tiles.withColumn("cells", F.expr(
+        "transform(cells, (v, i) -> CASE i % 3 WHEN 0 THEN CAST(NULL AS DOUBLE)"
+        " WHEN 1 THEN double('NaN') ELSE CAST(v AS DOUBLE) END)"))
+    poles = {0.0: (0, 0, 255, 255), 4.0: (255, 0, 0, 255)}
+    return Engine(density_engine.spark, {
+        "plain": Layer("plain", tiles),
+        "styled": Layer("styled", tiles, style={"poles": poles}),
+        "holes": Layer("holes", holes, style={"poles": poles}),
+    })
+
+
+@pytest.mark.parametrize("name", ["plain", "styled", "holes"])
+def test_get_tile_png_matches_bulk_render(render_engine, name):
+    # the in-process render and the bulk pandas-UDF render share one
+    # implementation, so the bytes must be identical
+    eng = render_engine
+    t = eng.layers[name].tiles.first()
+    want = eng.render_png(eng.get_tile(name, 3, t.tile_x, t.tile_y),
+                          eng.layers[name].style).collect()[0].png
+    got = eng.get_tile_png(name, 3, t.tile_x, t.tile_y)
+    assert got == bytes(want)
+    if name == "holes":
+        alpha = decode_png(got)[..., 3].ravel()
+        assert (alpha[0::3] == 0).all() and (alpha[1::3] == 0).all()
+
+
+def test_get_tile_png_missing_key_is_none(render_engine):
+    # the layer holds zoom 3 only, so a valid zoom-4 key has no tile
+    assert render_engine.get_tile_png("plain", 4, 5, 5) is None
+
+
+def test_get_values_points_are_a_local_relation(density_engine):
+    # the points must plan as a LocalTableScan under the broadcast, never
+    # as a Python RDD (Scan ExistingRDD), which costs a Python-worker job
+    # per request to build the broadcast side
+    df = density_engine.get_values("density", [(0.0, 0.0), (10.0, 20.0)], zoom=3)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    below = plan[plan.index("BroadcastExchange"):]
+    assert "LocalTableScan" in below
+
+
+def test_get_values_empty_points(density_engine):
+    df = density_engine.get_values("density", [], zoom=3)
+    assert df.columns == ["point_id", "lon", "lat", "value"]
+    assert df.collect() == []
