@@ -512,7 +512,7 @@ def run_bench(cores: int, only: str | None = None) -> dict:
             .cache()
         )
         tiles_z6.count()  # materialize outside the timed region (input table)
-    # q14 — pyramid rollup z6→z5 (Pyramid.up analog, pure SQL: JVM 2×2
+    # q14 — pyramid rollup z6→z5 (Pyramid.up analog: mapInArrow numpy 2×2
     # downsample + quadrant assembly, one shuffle on the parent key).
     # Runs FIRST in the z6 block: measured 5.6-6.5 s when it follows
     # q9/q11 late in a full suite vs 0.9-1.2 s fresh or isolated — an

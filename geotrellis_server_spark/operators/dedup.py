@@ -23,6 +23,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+
+def _spread_narrow(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to the default parallelism when it arrives as
+    fewer partitions than cores, so a CPU-heavy per-doc map is spread (a
+    5k-doc table is ONE parquet split — measured 1.3 s single-task vs
+    0.5 s spread). A plan holding an Exchange is already wide and is not
+    counted: under AQE ``rdd.getNumPartitions()`` runs its shuffle
+    stages, which the real query then runs again."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "Exchange" in plan:
+        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
+
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -218,13 +235,8 @@ def minhash_dedup_pairs(
     band joins and the candidate joins — nothing proportional to the
     token count."""
     tok_arrays = doc_token_arrays(docs, text_col, id_col)
-    # signature hashing is the CPU-heavy map (k md5s per token): make sure
-    # it parallelizes even when the input is a single small file (one scan
-    # split). Wide inputs (the 100-TB case: thousands of splits) are left
-    # untouched — no shuffle added.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if tok_arrays.rdd.getNumPartitions() < par:
-        tok_arrays = tok_arrays.repartition(par)
+    # signature hashing is the CPU-heavy map (k md5s per token)
+    tok_arrays = _spread_narrow(tok_arrays)
     sigs = minhash_signatures_arrays(tok_arrays, k, id_col)
     cand = lsh_candidate_pairs(sigs, bands, rows_per_band, id_col)
     if est_margin is not None:
@@ -471,15 +483,8 @@ def word_ngrams(docs: DataFrame, n: int = 8, text_col: str = "text",
         f"array_distinct(transform(sequence(0, size({toks}) - {n}), "
         f"i -> array_join(slice({toks}, CAST(i AS INT) + 1, {n}), ' ')))"
     )
-    # gram building is the CPU-heavy map (window join + distinct per
-    # doc): parallelize when the input arrives as fewer splits than
-    # cores (a 5k-doc table is ONE parquet split — measured 1.3 s
-    # single-task vs 0.5 s spread; same guard as minhash_dedup_pairs).
-    # Wide inputs (the 100-TB case) are untouched — no shuffle added.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-    return (docs.where(F.expr(f"size({toks}) >= {n}"))
+    # gram building is the CPU-heavy map (window join + distinct per doc)
+    return (_spread_narrow(docs).where(F.expr(f"size({toks}) >= {n}"))
             .select(F.col(id_col), F.explode(F.expr(grams)).alias("ngram")))
 
 

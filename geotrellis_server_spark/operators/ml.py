@@ -26,6 +26,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..arrow_lists import list_col, list_matrix
+
 # k-means coordinate quanta: embeddings live in ~[-1, 1], so 2^20
 # quanta keep 6 significant digits; squared-distance sums stay < 2^48
 # for dim <= 64 (see kmeans docstring for the general bound)
@@ -125,20 +127,9 @@ def kmeans(
             checkpoint.commit_json(0, cents)
     fscale = float(scale)
 
-    def _mat(col):
-        """Zero-copy (n, dim) float matrix from an Arrow list column —
-        flatten() honours slice offsets; list lengths are uniform by
-        the dim contract, asserted here."""
-        flat = col.flatten().to_numpy(zero_copy_only=False)
-        if len(flat) != len(col) * dim:
-            raise ValueError(
-                f"ragged vector column: {len(flat)} values for "
-                f"{len(col)} rows of dim {dim}")
-        return flat.reshape(len(col), dim)
-
     def _dists(E, C, cc):
         """n x k exact integer distances (float64)."""
-        Q = np.floor(E.astype(np.float64) * fscale)
+        Q = np.floor(E * fscale)
         qq = (Q * Q).sum(axis=1)
         return qq[:, None] - 2.0 * (Q @ C.T) + cc[None, :], Q
 
@@ -158,7 +149,7 @@ def kmeans(
             for rb in batches:
                 if not rb.num_rows:
                     continue
-                E = _mat(rb.column(0))
+                E = list_matrix(rb.column(0), dim, "vector")
                 D, Q = _dists(E, C, cc)
                 cid = D.argmin(axis=1)
                 # one-hot matmul: exact integer per-cluster sums in one
@@ -172,8 +163,7 @@ def kmeans(
                 yield pa.RecordBatch.from_arrays(
                     [pa.array((live + 1).astype(np.int32)),
                      pa.array(cnt[live]),
-                     pa.array([[int(v) for v in sums[c]] for c in live],
-                              type=pa.list_(pa.int64()))],
+                     list_col(sums[live].astype(np.int64))],
                     names=["cid", "n", "s"])
 
         # ship ONLY the vector column into the training rounds — the id
@@ -191,7 +181,7 @@ def kmeans(
             for rb in batches:
                 if not rb.num_rows:
                     continue
-                E = _mat(rb.column(1))
+                E = list_matrix(rb.column(1), dim, "vector")
                 D, _ = _dists(E, C, cc)
                 cid = D.argmin(axis=1)
                 yield pa.RecordBatch.from_arrays(

@@ -99,7 +99,9 @@ def quadtree_oracle_sql(cells_sql: str, max_z: int, cap: int) -> str:
             f"s{z} AS (SELECT c.x, c.y FROM c{z} c"
             f" JOIN s{z - 1} p ON c.x // 2 = p.x AND c.y // 2 = p.y"
             f" WHERE c.n > {cap})")
-    sel = [f"SELECT 0 AS z, x, y, n AS n_docs FROM c0 WHERE n <= {cap}"]
+    # the root is a leaf whatever its count when it is also the max_z level
+    root_guard = "" if max_z == 0 else f" WHERE n <= {cap}"
+    sel = [f"SELECT 0 AS z, x, y, n AS n_docs FROM c0{root_guard}"]
     for z in range(1, max_z + 1):
         guard = "" if z == max_z else f" WHERE c.n <= {cap}"
         sel.append(

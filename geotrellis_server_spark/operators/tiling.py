@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import sqlgen
+from ..arrow_lists import batch_tile_size, list_col, list_matrix, list_rows
 
 
 def assign_tiles(points: DataFrame, zoom: int, lon: str = "lon", lat: str = "lat") -> DataFrame:
@@ -177,130 +178,53 @@ def rasterize_count_layout(
     return _densify_tiles(per_pixel, zoom, ts)
 
 
-def pyramid_up(
-    tiles: DataFrame, agg: str = "sum", fill: float = 0.0,
-    impl: str = "arrow",
-) -> DataFrame:
+def pyramid_up(tiles: DataFrame, agg: str = "sum", fill: float = 0.0) -> DataFrame:
     """Pyramid rollup: build zoom z-1 tiles from zoom z by 2×2 pixel
     aggregation — GeoTrellis ``Pyramid.up`` (spark/.../pyramid/
-    Pyramid.scala). Two implementations, bit-identical (tests assert
-    equality):
+    Pyramid.scala). One implementation, two mapInArrow numpy kernels
+    around the one shuffle on the parent key (the natural partitioning
+    for writing the next level):
 
-    - ``impl="arrow"`` (default): the per-cell work (2×2 downsample,
-      quadrant assembly) runs as numpy slices inside two mapInPandas
-      kernels around the one parent-key shuffle. Spark's higher-order
-      array functions (transform/slice/flatten) never enter whole-stage
-      codegen — they run on the interpreted expression evaluator, whose
-      JIT-compiled speed depends on which OTHER queries ran first in
-      the session (measured: the same pyramid query runs 0.8 s with a
-      clean profile and a persistent 2-5 s when the interpreter's call
-      sites were first compiled against a session that had run other
-      HOF-heavy operators — every suite run, in practice). numpy is
-      immune to that hazard and equally fast on the clean profile.
-    - ``impl="sql"``: the original pure-SQL form below (also the shape
-      the oracle mirrors), kept as the equality witness.
+    1. ``down_kernel`` downsamples each child tile to a quarter-size
+       quadrant keyed by its parent (floor division, so negative
+       custom-CRS tile keys roll up correctly), with ``agg`` = 'sum'
+       (counts: parent pixel = sum of its 4 children, so rolling up a
+       density raster EQUALS rasterizing at z-1 directly — the oracle
+       contract) | 'mean' (continuous data — the GDAL-average overview
+       recipe) | 'max';
+    2. ``asm_kernel`` assembles each parent from its 4 quadrants.
 
-    The SQL formulation:
-
-    1. each child tile downsamples to a quarter-size quadrant
-       (``transform(sequence)`` + O(1) array indexing — JVM-side), with
-       ``agg`` = 'sum' (counts: parent pixel = sum of its 4 children,
-       so rolling up a density raster EQUALS rasterizing at z-1
-       directly — the oracle contract) | 'mean' (continuous data — the
-       GDAL-average overview recipe) | 'max',
-    2. the 4 quadrants group to the parent key and assemble via the
-       same any_value(when())-pivot + slice/concat idiom as the focal
-       halo assembly (operators/focal.py) — one shuffle on the parent
-       key, the natural partitioning for writing the next level.
+    Sum/mean accumulate ((TL + TR) + BL) + BR and max uses np.maximum
+    (NaN propagates, as in Spark ``greatest``), so the doubles equal
+    the pure-SQL transform/slice form bit for bit; that form is the
+    reference in tests/test_tiling.py. It is not the implementation
+    because Spark's higher-order array functions never enter
+    whole-stage codegen (measured 0.8 s on a fresh session, a
+    persistent 2-5 s after other HOF-heavy operators had run).
 
     Missing children fill with ``fill`` (0 for count layers; NaN keeps
     NoData for continuous layers). Input tiles must share one (zoom,
-    width, height) — the Arrow kernels raise ValueError on a batch that
-    mixes sizes, holds an odd size, a NULL ``cells`` row or a list whose
+    width, height) — the kernels raise ValueError on a batch that mixes
+    sizes, holds an odd size, a NULL ``cells`` row or a list whose
     length is not width*height; output halves the zoom's tile count,
-    same tile size.
+    same tile size. The output schema is declared, not analysed:
+    ``zoom`` as ``zoom - 1`` types it, bigint tile keys, the input's
+    width/height types, ``array<double>`` cells.
     Iterating z..1 materializes the whole pyramid in log2 rounds, each
     a narrow shuffle of quarter-size quadrants (¼ the naive volume of
     re-keying raw points per level)."""
+    import pyarrow as pa
+
     if agg not in ("sum", "mean", "max"):
         raise ValueError("agg must be one of ['max', 'mean', 'sum']")
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    if impl == "arrow":
-        return _pyramid_up_arrow(tiles, agg, fill)
-    return _pyramid_up_sql(tiles, agg, fill)
-
-
-def _list_rows(col, size: int):
-    """(null_mask, offsets, flat float64 values) of an Arrow list column.
-    Built from the raw buffers so NaN elements stay NaN (pandas
-    round-trips would coerce them to null). Raises ValueError when a
-    non-NULL row's length (per the offsets) is not ``size``."""
-    mask = np.asarray(col.is_null())
-    offs = np.asarray(col.offsets)
-    lens = np.diff(offs)
-    bad = ~mask & (lens != size)
-    if bad.any():
-        i = int(np.argmax(bad))
-        raise ValueError(f"list row {i} holds {lens[i]} values, expected {size}")
-    vals = np.asarray(col.values, dtype=np.float64)
-    return mask, offs, vals
-
-
-def _list_col(arr2d):
-    """numpy (n, k) float64 -> pa list<double> rows, NaN-preserving.
-    Offsets are computed in int64; a list<double> column holds int32
-    offsets, so more than 2**31 - 1 values raise instead of wrapping."""
-    import pyarrow as pa
-
-    n, k = arr2d.shape
-    if n * k >= 2**31:
-        raise ValueError(
-            f"{n} rows x {k} values overflow int32 list offsets; "
-            "use smaller Arrow batches (spark.sql.execution.arrow."
-            "maxRecordsPerBatch)")
-    return pa.ListArray.from_arrays(
-        pa.array(np.arange(n + 1, dtype=np.int64) * k, type=pa.int32()),
-        pa.array(arr2d.reshape(-1), type=pa.float64()))
-
-
-def _batch_tile_size(b) -> tuple[int, int]:
-    """The one (width, height) of every row in an Arrow batch. The
-    kernels reshape whole batches, so a mixed or odd size would silently
-    corrupt neighbouring tiles; both raise ValueError instead."""
-    w = np.asarray(b.column("width"))
-    h = np.asarray(b.column("height"))
-    if (w != w[0]).any() or (h != h[0]).any():
-        raise ValueError(
-            "pyramid_up requires one tile size per batch, got "
-            f"{sorted(set(zip(w.tolist(), h.tolist())))} (width, height)")
-    if w[0] % 2 or h[0] % 2:
-        raise ValueError(
-            f"pyramid_up requires even tile size, got {int(w[0])}x{int(h[0])}")
-    return int(w[0]), int(h[0])
-
-
-def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
-    """numpy-kernel pyramid_up. FP-order parity with the SQL form:
-    sum/mean accumulate ((TL + TR) + BL) + BR element-wise — the same
-    left-to-right order as the SQL ``a + b + c + d`` — and max uses
-    np.maximum (NaN-propagating, matching Spark ``greatest`` where NaN
-    compares greater than every value), so doubles are bit-identical."""
-    import pyarrow as pa
-
-    sql_schema = _pyramid_up_sql(tiles, agg, fill).schema  # analysis only
 
     def down_kernel(batches):
         for b in batches:
             n = b.num_rows
             if not n:
                 continue
-            w, h = _batch_tile_size(b)
-            mask, offs, vals = _list_rows(b.column("cells"), h * w)
-            if mask.any():
-                raise ValueError(
-                    f"pyramid_up: NULL cells in row {int(np.argmax(mask))}")
-            cells = vals[offs[0]:offs[-1]].reshape(n, h, w)
+            w, h = batch_tile_size(b)
+            cells = list_matrix(b.column("cells"), h * w, "cells").reshape(n, h, w)
             a = cells[:, 0::2, 0::2]
             bb = cells[:, 0::2, 1::2]
             c = cells[:, 1::2, 0::2]
@@ -321,7 +245,7 @@ def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
                  pa.array(np.mod(ty, 2).astype(np.int32)),
                  pa.array(np.full(n, w, np.int32)),
                  pa.array(np.full(n, h, np.int32)),
-                 _list_col(q.reshape(n, -1))],
+                 list_col(q.reshape(n, -1))],
                 names=["zoom", "tile_x", "tile_y", "qx", "qy",
                        "width", "height", "qcells"])
 
@@ -369,7 +293,7 @@ def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
             nrow = b.num_rows
             if not nrow:
                 continue
-            w, h = _batch_tile_size(b)
+            w, h = batch_tile_size(b)
             h2, w2 = h // 2, w // 2
             out = np.empty((nrow, h, w), dtype=np.float64)
             missing = np.full((h2, w2), fill, dtype=np.float64)
@@ -378,7 +302,7 @@ def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
                      "01": (slice(h2, None), slice(None, w2)),
                      "11": (slice(h2, None), slice(w2, None))}
             for k, (rs, cs) in views.items():
-                mask, offs, vals = _list_rows(b.column(f"q_{k}"), h2 * w2)
+                mask, offs, vals = list_rows(b.column(f"q_{k}"), h2 * w2)
                 for i in range(nrow):
                     out[i, rs, cs] = (missing if mask[i] else
                                       vals[offs[i]:offs[i + 1]]
@@ -387,89 +311,17 @@ def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
                 [b.column("zoom"), b.column("tile_x"), b.column("tile_y"),
                  pa.array(np.full(nrow, w, np.int32)),
                  pa.array(np.full(nrow, h, np.int32)),
-                 _list_col(out.reshape(nrow, -1))],
+                 list_col(out.reshape(nrow, -1))],
                 names=["zoom", "tile_x", "tile_y",
                        "width", "height", "cells"])
 
-    out = per_parent.mapInArrow(asm_kernel, out_schema)
-    # column order + types exactly as the SQL form produces them
-    return out.select(
-        *(F.col(f.name).cast(f.dataType) for f in sql_schema.fields))
-
-
-def _pyramid_up_sql(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
-    ops = {
-        "sum": lambda a, b, c, d: f"{a} + {b} + {c} + {d}",
-        "mean": lambda a, b, c, d: f"({a} + {b} + {c} + {d}) / 4.0",
-        "max": lambda a, b, c, d: f"greatest({a}, {b}, {c}, {d})",
-    }
-    if agg not in ops:
-        raise ValueError(f"agg must be one of {sorted(ops)}")
-
-    # step 1: child tile -> (parent key, quadrant position, q*q cells)
-    # quadrant pixel (r, c) aggregates child pixels (2r, 2c)..(2r+1, 2c+1)
-    def child(dr: int, dc: int) -> str:
-        return (
-            f"element_at(cells, CAST((i DIV (width DIV 2)) * 2 * width"
-            f" + ({dr}) * width"
-            f" + (i % (width DIV 2)) * 2 + ({dc}) + 1 AS INT))"
-        )
-
-    quad = (
-        f"transform(sequence(0, (width DIV 2) * (height DIV 2) - 1), "
-        f"i -> {ops[agg](child(0, 0), child(0, 1), child(1, 0), child(1, 1))})"
-    )
-    # floor-division parent keys + pmod quadrant positions so NEGATIVE
-    # tile coordinates (custom-CRS layouts) map correctly — plain DIV/%
-    # truncate toward zero and would route tile -1 to parent 0 with a
-    # quadrant of -1 that matches no pivot column (silent data loss)
-    guard = (
-        "CASE WHEN width % 2 = 0 AND height % 2 = 0 THEN "
-        f"{quad} ELSE raise_error('pyramid_up requires even tile size') END"
-    )
-    quads = tiles.selectExpr(
-        "zoom - 1 AS zoom",
-        "(tile_x - pmod(tile_x, 2)) DIV 2 AS tile_x",
-        "(tile_y - pmod(tile_y, 2)) DIV 2 AS tile_y",
-        "CAST(pmod(tile_x, 2) AS INT) AS qx",
-        "CAST(pmod(tile_y, 2) AS INT) AS qy",
-        "width",
-        "height",
-        f"{guard} AS qcells",
-    )
-
-    # step 2: pivot quadrants to columns, assemble rows west++east
-    def pick(qx: int, qy: int) -> F.Column:
-        return F.any_value(
-            F.when((F.col("qx") == qx) & (F.col("qy") == qy), F.col("qcells")),
-            True,
-        ).alias(f"q_{qx}{qy}")
-
-    per_parent = quads.groupBy("zoom", "tile_x", "tile_y").agg(
-        pick(0, 0), pick(1, 0), pick(0, 1), pick(1, 1),
-        F.any_value(F.col("width"), True).alias("width"),
-        F.any_value(F.col("height"), True).alias("height"),
-    )
-    nd = f"CAST({fill!r} AS DOUBLE)" if fill == fill else "CAST('NaN' AS DOUBLE)"
-    g = {
-        k: f"coalesce(q_{k}, array_repeat({nd}, CAST((width DIV 2) * (height DIV 2) AS INT)))"
-        for k in ("00", "10", "01", "11")
-    }
-    half = "CAST(width DIV 2 AS INT)"
-    rows = (
-        f"flatten(transform(sequence(0, height DIV 2 - 1), r -> concat("
-        f"slice({g['00']}, CAST(r AS INT) * {half} + 1, {half}), "
-        f"slice({g['10']}, CAST(r AS INT) * {half} + 1, {half}))))"
-    )
-    rows_s = (
-        f"flatten(transform(sequence(0, height DIV 2 - 1), r -> concat("
-        f"slice({g['01']}, CAST(r AS INT) * {half} + 1, {half}), "
-        f"slice({g['11']}, CAST(r AS INT) * {half} + 1, {half}))))"
-    )
-    return per_parent.selectExpr(
-        "zoom", "tile_x", "tile_y", "width", "height",
-        f"concat({rows}, {rows_s}) AS cells",
-    )
+    types = {f.name: f.dataType for f in tiles.schema.fields}
+    zoom_t = (T.LongType() if isinstance(types["zoom"], T.LongType)
+              else T.IntegerType())
+    return per_parent.mapInArrow(asm_kernel, out_schema).select(
+        F.col("zoom").cast(zoom_t), "tile_x", "tile_y",
+        F.col("width").cast(types["width"]),
+        F.col("height").cast(types["height"]), "cells")
 
 
 def write_pyramid(

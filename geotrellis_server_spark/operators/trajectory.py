@@ -125,7 +125,6 @@ def rasterize_hops(
     id_col: str = "event_id",
     lon: str = "lon",
     lat: str = "lat",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Linestring rasterization of per-user trajectories (GeoTrellis
     rasterizes LineStrings cell-per-major-axis-step — Rasterizer
@@ -135,16 +134,20 @@ def rasterize_hops(
     ``zoom``; output (px, py, n_traversals) counts line cells, exactly.
 
     Why DDA and not Bresenham: the rounded-DDA cell at step t is a
-    CLOSED-FORM exact-integer expression (one row-local explode of
-    sequence(0, n) — whole-stage codegen, no recurrence), while
+    CLOSED-FORM exact-integer expression (:func:`_dda_coord_sql`), while
     Bresenham's error accumulator is inherently sequential. Same
     one-cell-per-major-step contract.
 
+    One implementation: a mapInPandas numpy kernel evaluates that
+    closed form for every step of every hop. The SQL form (one
+    ``explode(sequence(0, n))`` per hop) is the reference in
+    tests/test_spatial_join.py.
+
     Scale shape: hop building is one user-keyed window exchange (free
-    when the log is stored partitioned by user); the explode is
-    row-local and bounded by the grid diameter; the count is ONE
-    map-side-combined aggregate on the pixel key — hot corridors
-    collapse in partials."""
+    when the log is stored partitioned by user); each kernel task
+    accumulates its cells into one partial count table, and the count
+    is ONE aggregate on the pixel key over those partials — hot
+    corridors collapse inside the task."""
     from .density import global_pixel_sql
 
     gpx, gpy = global_pixel_sql(lon, lat, zoom, tile_size)
@@ -165,27 +168,15 @@ def rasterize_hops(
             F.lag("y1").over(w).alias("y0"),
         )
         .where("x0 IS NOT NULL")
-        .withColumn("n", F.expr("greatest(abs(x1 - x0), abs(y1 - y0))"))
     )
-    if impl == "sql":
-        px = _dda_coord_sql("x0", "x1", "n", "t")
-        py = _dda_coord_sql("y0", "y1", "n", "t")
-        return (
-            hops.select("x0", "y0", "x1", "y1", "n",
-                        F.expr("explode(sequence(0, n))").alias("t"))
-            .select(F.expr(px).alias("px"), F.expr(py).alias("py"))
-            .groupBy("px", "py")
-            .agg(F.count("*").alias("n_traversals"))
-        )
 
-    # Arrow kernel (default): the explode+CASE path evaluates ~85 ns/cell
-    # in codegen (measured: 331M cells = 31 s at sf0.1×40); the numpy DDA
+    # The explode+CASE SQL form evaluates ~85 ns/cell in codegen
+    # (measured: 331M cells = 31 s at sf0.1×40). The numpy DDA
     # accumulates ONE dense counts array per TASK across all its Arrow
     # batches and emits the nonzeros once at iterator exhaustion, so the
-    # exchange carries <= grid-size partials per task (not per batch) and
-    # the per-batch bincount/DataFrame overhead is gone. The identical
-    # integer floor arithmetic keeps the result bit-equal to the SQL path
-    # (tests assert equality) — the q22 Arrow-beats-codegen doctrine.
+    # exchange carries <= grid-size partials per task (not per batch).
+    # It uses the same integer floor arithmetic as _dda_coord_sql, so it
+    # equals the SQL form exactly (tests/test_spatial_join.py).
     # Intermediates drop to int32 when every product fits (grids up to
     # ~23k px/side): half the memory traffic over the cell stream.
     import numpy as np
@@ -252,8 +243,7 @@ def rasterize_hops(
             yield pd.DataFrame({"px": uk // n_px, "py": uk % n_px,
                                 "partial": uc})
 
-    return (hops.select("x0", "y0", "x1", "y1")
-            .mapInPandas(kernel, schema)
+    return (hops.mapInPandas(kernel, schema)
             .groupBy("px", "py")
             .agg(F.sum("partial").alias("n_traversals")))
 

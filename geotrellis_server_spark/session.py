@@ -39,7 +39,7 @@ def get_spark(
         # JIT code cache: whole-stage codegen emits one large class per
         # query plan; a long session (a bench suite, a notebook) fills
         # the default 240MB ReservedCodeCacheSize and late queries with
-        # BIG generated methods (pyramid_up's quadrant assembly) drop to
+        # BIG generated methods (array-HOF tile assembly) drop to
         # the interpreter — measured ~5x on q14 when it runs late in a
         # full suite vs ~1s fresh/isolated. In local mode the driver JVM
         # hosts the executors, so the driver option covers both.

@@ -28,13 +28,18 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> None:
+    qs = entrymod.queries()
+    # a mistyped subset name would otherwise select nothing and pass
+    unknown = sorted(set(ONLY or ()) - set(qs))
+    if unknown:
+        print(f"unknown gate queries: {', '.join(unknown)}", file=sys.stderr)
+        sys.exit(2)
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     n_fail = 0
     for name, fn in qs.items():

@@ -201,3 +201,28 @@ def test_decontaminate_min_hits_threshold(spark):
     hits1 = decontaminate(train, evals, n=5, min_hits=1).count()
     hits9 = decontaminate(train, evals, n=5, min_hits=9).count()
     assert hits1 == 1 and hits9 == 0
+
+
+def test_narrow_input_guard_launches_no_job(spark):
+    """The narrow-input guard of minhash_dedup_pairs/word_ngrams decides
+    at plan-building time: a shuffled input counts as wide and launches
+    no job (counting its partitions under AQE would run its shuffle);
+    an exchange-free single-partition input is still spread."""
+    sc = spark.sparkContext
+    shuffled = (spark.range(2000).selectExpr("id % 7 AS k").groupBy("k").count()
+                .selectExpr("CAST(k AS STRING) AS doc_id",
+                            "repeat('a b c d e f g h ', CAST(count % 5 + 1 AS INT)) AS text"))
+    group = "narrow-input-guard"
+    sc.setJobGroup(group, "plan building only")
+    try:
+        grams = D.word_ngrams(shuffled, 3)
+        D.minhash_dedup_pairs(shuffled)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert "RoundRobinPartitioning" not in \
+        grams._jdf.queryExecution().executedPlan().toString()
+
+    narrow = shuffled.coalesce(1).localCheckpoint()
+    plan = D.word_ngrams(narrow, 3)._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan

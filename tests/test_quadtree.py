@@ -69,14 +69,17 @@ def test_spark_matches_scalar_reference(spark, pts):
 
 
 def test_sql_oracle_matches_scalar(pts):
-    ref = _scalar_quadtree(pts, 8, 50)
-    con = duckdb.connect()
-    con.execute("CREATE TABLE p (x BIGINT, y BIGINT)")
-    con.executemany("INSERT INTO p VALUES (?, ?)", pts)
-    sql = quadtree_oracle_sql(
-        "SELECT x, y, count(*) AS n FROM p GROUP BY 1, 2", 8, 50)
-    got = {(z, x, y): n for z, x, y, n in con.execute(sql).fetchall()}
-    assert got == ref
+    # max_z=0: every point maps onto the 1x1 grid, so the root is the only
+    # cell and a leaf even though its count is over the cap
+    for max_z, cloud in ((8, pts), (0, [(x >> 8, y >> 8) for x, y in pts])):
+        ref = _scalar_quadtree(cloud, max_z, 50)
+        con = duckdb.connect()
+        con.execute("CREATE TABLE p (x BIGINT, y BIGINT)")
+        con.executemany("INSERT INTO p VALUES (?, ?)", cloud)
+        sql = quadtree_oracle_sql(
+            "SELECT x, y, count(*) AS n FROM p GROUP BY 1, 2", max_z, 50)
+        got = {(z, x, y): n for z, x, y, n in con.execute(sql).fetchall()}
+        assert got == ref, max_z
 
 
 def test_all_under_cap_single_root():

@@ -3,6 +3,9 @@ strategy: engine output must match cross-join + PIP row-for-row)."""
 
 import duckdb
 import pyspark.sql.functions as F
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from geotrellis_server_spark import sqlgen
 from geotrellis_server_spark.geometry.pip import points_in_ring
@@ -267,9 +270,42 @@ def test_simplify_trajectories_tolerance_and_invariance(spark):
     assert a == b
 
 
+EVENT_DDL = "event_id long, user_id long, ts timestamp, lon double, lat double"
+
+
+def rasterize_hops_sql_reference(events, zoom: int, tile_size: int = 64):
+    """Pure-SQL rasterize_hops — the reference the numpy DDA kernel must
+    equal exactly: the same (ts, event_id)-ordered hops, one row-local
+    ``explode(sequence(0, n))`` per hop, and the ``_dda_coord_sql``
+    closed form the gate oracle also replays."""
+    from pyspark.sql import Window
+
+    from geotrellis_server_spark.operators.density import global_pixel_sql
+    from geotrellis_server_spark.operators.trajectory import _dda_coord_sql
+
+    gpx, gpy = global_pixel_sql("lon", "lat", zoom, tile_size)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    hops = (
+        events.select("user_id", "ts", "event_id",
+                      F.expr(gpx).alias("x1"), F.expr(gpy).alias("y1"))
+        .select("x1", "y1", F.lag("x1").over(w).alias("x0"),
+                F.lag("y1").over(w).alias("y0"))
+        .where("x0 IS NOT NULL")
+        .withColumn("n", F.expr("greatest(abs(x1 - x0), abs(y1 - y0))"))
+    )
+    return (
+        hops.select("x0", "y0", "x1", "y1", "n",
+                    F.expr("explode(sequence(0, n))").alias("t"))
+        .select(F.expr(_dda_coord_sql("x0", "x1", "n", "t")).alias("px"),
+                F.expr(_dda_coord_sql("y0", "y1", "n", "t")).alias("py"))
+        .groupBy("px", "py")
+        .agg(F.count("*").alias("n_traversals"))
+    )
+
+
 def test_rasterize_hops_arrow_equals_sql(spark):
-    """The Arrow DDA kernel and the pure-SQL explode path are
-    bit-identical (same int64 floor arithmetic)."""
+    """The Arrow DDA kernel and the test-side pure-SQL explode reference
+    are bit-identical (same int64 floor arithmetic)."""
     from datetime import datetime, timedelta
 
     from geotrellis_server_spark.operators.trajectory import rasterize_hops
@@ -278,8 +314,46 @@ def test_rasterize_hops_arrow_equals_sql(spark):
     rows = [(k, k % 7, t0 + timedelta(minutes=k),
              float(-170 + (k * 37) % 340), float(-80 + (k * 53) % 160))
             for k in range(300)]
-    ev = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, lon double, lat double")
-    a = sorted(map(tuple, rasterize_hops(ev, 2, 64, impl="arrow").collect()))
-    b = sorted(map(tuple, rasterize_hops(ev, 2, 64, impl="sql").collect()))
+    ev = spark.createDataFrame(rows, EVENT_DDL)
+    a = sorted(map(tuple, rasterize_hops(ev, 2, 64).collect()))
+    b = sorted(map(tuple, rasterize_hops_sql_reference(ev, 2, 64).collect()))
     assert a == b and len(a) > 100
+    # one implementation: the former impl switch is gone from the signature
+    with pytest.raises(TypeError, match="impl"):
+        rasterize_hops(ev, 2, 64, impl="sql")
+
+
+@st.composite
+def event_logs(draw):
+    """(rows, zoom, tile_size, partitions): a few users' events with
+    repeated timestamps (the event id breaks ties), repeated points
+    (zero-length hops) and grids on both sides of the kernel's dense
+    and int32 limits."""
+    from datetime import datetime, timedelta
+
+    t0 = datetime(2024, 1, 1)
+    lon = st.floats(-180.0, 180.0)
+    lat = st.floats(-85.0, 85.0)
+    pts = draw(st.lists(st.tuples(st.integers(0, 3), st.integers(0, 20), lon, lat),
+                        min_size=1, max_size=30))
+    rows = [(k, u, t0 + timedelta(minutes=m), x, y)
+            for k, (u, m, x, y) in enumerate(pts)]
+    zoom = draw(st.sampled_from([0, 1, 3, 7, 9]))
+    return rows, zoom, draw(st.sampled_from([4, 64])), draw(st.integers(1, 5))
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(log=event_logs())
+def test_rasterize_hops_property_equals_sql_reference(spark, arrow_batch, log):
+    """At Arrow batches of 1, 7 and 4096 rows, over inputs spread across
+    up to 5 partitions (some empty), the kernel equals the reference."""
+    from geotrellis_server_spark.operators.trajectory import rasterize_hops
+
+    rows, zoom, tile_size, parts = log
+    ev = spark.createDataFrame(rows, EVENT_DDL).repartition(parts)
+    want = sorted(map(tuple, rasterize_hops_sql_reference(ev, zoom, tile_size).collect()))
+    for n in (1, 7, 4096):
+        with arrow_batch(n):
+            got = sorted(map(tuple, rasterize_hops(ev, zoom, tile_size).collect()))
+        assert got == want, n

@@ -1,10 +1,14 @@
 """Tile assignment + rasterization vs oracles (SURVEY.md R4; exact tile
 assignments are a correctness gate per BASELINE.json)."""
 
+import math
+
 import duckdb
 import numpy as np
 import pytest
 import pyspark.sql.functions as F
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from geotrellis_server_spark import sqlgen
 from geotrellis_server_spark.grids.layout import tile_key_np
@@ -12,6 +16,81 @@ from geotrellis_server_spark.operators import tiling
 from geotrellis_server_spark.sources import synth
 
 N = 3000
+
+TILE_DDL = "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>"
+
+
+def pyramid_up_sql_reference(tiles, agg: str, fill: float):
+    """Pure-SQL pyramid rollup — the bit-for-bit reference the Arrow
+    kernels of ``tiling.pyramid_up`` must equal (same FP accumulation
+    order: ``a + b + c + d`` left to right; ``greatest`` for max)."""
+    ops = {
+        "sum": lambda a, b, c, d: f"{a} + {b} + {c} + {d}",
+        "mean": lambda a, b, c, d: f"({a} + {b} + {c} + {d}) / 4.0",
+        "max": lambda a, b, c, d: f"greatest({a}, {b}, {c}, {d})",
+    }
+
+    # step 1: child tile -> (parent key, quadrant position, q*q cells)
+    # quadrant pixel (r, c) aggregates child pixels (2r, 2c)..(2r+1, 2c+1)
+    def child(dr: int, dc: int) -> str:
+        return (
+            f"element_at(cells, CAST((i DIV (width DIV 2)) * 2 * width"
+            f" + ({dr}) * width"
+            f" + (i % (width DIV 2)) * 2 + ({dc}) + 1 AS INT))"
+        )
+
+    quad = (
+        f"transform(sequence(0, (width DIV 2) * (height DIV 2) - 1), "
+        f"i -> {ops[agg](child(0, 0), child(0, 1), child(1, 0), child(1, 1))})"
+    )
+    # floor-division parent keys + pmod quadrant positions so NEGATIVE
+    # tile coordinates map correctly — plain DIV/% truncate toward zero
+    quads = tiles.selectExpr(
+        "zoom - 1 AS zoom",
+        "(tile_x - pmod(tile_x, 2)) DIV 2 AS tile_x",
+        "(tile_y - pmod(tile_y, 2)) DIV 2 AS tile_y",
+        "CAST(pmod(tile_x, 2) AS INT) AS qx",
+        "CAST(pmod(tile_y, 2) AS INT) AS qy",
+        "width",
+        "height",
+        f"{quad} AS qcells",
+    )
+
+    # step 2: pivot quadrants to columns, assemble rows west++east
+    def pick(qx: int, qy: int):
+        return F.any_value(
+            F.when((F.col("qx") == qx) & (F.col("qy") == qy), F.col("qcells")),
+            True,
+        ).alias(f"q_{qx}{qy}")
+
+    per_parent = quads.groupBy("zoom", "tile_x", "tile_y").agg(
+        pick(0, 0), pick(1, 0), pick(0, 1), pick(1, 1),
+        F.any_value(F.col("width"), True).alias("width"),
+        F.any_value(F.col("height"), True).alias("height"),
+    )
+    nd = f"CAST({fill!r} AS DOUBLE)" if fill == fill else "CAST('NaN' AS DOUBLE)"
+    g = {
+        k: f"coalesce(q_{k}, array_repeat({nd}, CAST((width DIV 2) * (height DIV 2) AS INT)))"
+        for k in ("00", "10", "01", "11")
+    }
+    half = "CAST(width DIV 2 AS INT)"
+    rows_n, rows_s = (
+        f"flatten(transform(sequence(0, height DIV 2 - 1), r -> concat("
+        f"slice({g[w]}, CAST(r AS INT) * {half} + 1, {half}), "
+        f"slice({g[e]}, CAST(r AS INT) * {half} + 1, {half}))))"
+        for w, e in (("00", "10"), ("01", "11"))
+    )
+    return per_parent.selectExpr(
+        "zoom", "tile_x", "tile_y", "width", "height",
+        f"concat({rows_n}, {rows_s}) AS cells",
+    )
+
+
+def _by_key(df):
+    """{(zoom, x, y): repr((w, h, cells))} — repr keeps NaN comparable
+    and every double bit-exact."""
+    return {(r.zoom, r.tile_x, r.tile_y): repr((r.width, r.height, tuple(r.cells)))
+            for r in df.collect()}
 
 
 def test_tile_counts_match_duckdb(spark):
@@ -127,19 +206,15 @@ def test_pyramid_up_plan_shapes(spark):
         [(3, 0, 0, 4, 4, [0.0] * 16)],
         "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>",
     )
-    # sql impl: pure JVM, no Python nodes
-    plan = pyramid_up(df, impl="sql")._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "MapInArrow" not in plan
-    # arrow impl (default): Arrow-batched kernels, never row-at-a-time
+    # Arrow-batched kernels, never row-at-a-time
     plan_a = pyramid_up(df)._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan_a
     assert "BatchEvalPython" not in plan_a
 
 
 def test_pyramid_up_arrow_equals_sql(spark):
-    """The Arrow kernels must be bit-identical to the SQL form on all
-    aggs, including missing quadrants, NaN fill, and negative tile
+    """The Arrow kernels must be bit-identical to the test-side SQL
+    reference on all aggs, including missing quadrants, NaN fill, and negative tile
     coordinates (the FP accumulation order is the same by design)."""
     import random
 
@@ -158,17 +233,77 @@ def test_pyramid_up_arrow_equals_sql(spark):
         "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>",
     )
     for agg, fill in (("sum", 0.0), ("mean", float("nan")), ("max", 0.0)):
-        a = {(r.zoom, r.tile_x, r.tile_y):
-             (r.width, r.height, tuple(r.cells))
-             for r in pyramid_up(df, agg=agg, fill=fill,
-                                 impl="arrow").collect()}
-        b = {(r.zoom, r.tile_x, r.tile_y):
-             (r.width, r.height, tuple(r.cells))
-             for r in pyramid_up(df, agg=agg, fill=fill,
-                                 impl="sql").collect()}
-        # NaN != NaN: compare via repr which preserves bit-level doubles
-        assert {k: repr(v) for k, v in a.items()} == \
-               {k: repr(v) for k, v in b.items()}, agg
+        assert _by_key(pyramid_up(df, agg=agg, fill=fill)) == \
+            _by_key(pyramid_up_sql_reference(df, agg, fill)), agg
+
+
+def test_pyramid_up_schema_is_written_out(spark):
+    """The output schema is declared, not analysed from a second plan,
+    and equals what the SQL form types: zoom as ``zoom - 1``, bigint
+    keys, width/height as given, array<double> cells, all nullable."""
+    from geotrellis_server_spark.operators.tiling import pyramid_up
+
+    for src, want in (
+        (TILE_DDL, TILE_DDL),
+        (TILE_DDL.replace("zoom INT", "zoom BIGINT"),
+         TILE_DDL.replace("zoom INT", "zoom BIGINT")),
+        ("zoom SMALLINT, tile_x INT, tile_y INT, width BIGINT, height TINYINT,"
+         " cells ARRAY<FLOAT>",
+         "zoom INT, tile_x BIGINT, tile_y BIGINT, width BIGINT, height TINYINT,"
+         " cells ARRAY<DOUBLE>"),
+    ):
+        df = spark.createDataFrame([], src)
+        expected = spark.createDataFrame([], want).schema
+        for agg in ("sum", "mean", "max"):
+            assert pyramid_up(df, agg=agg).schema == expected, (src, agg)
+            ref = pyramid_up_sql_reference(df, agg, 0.0).schema
+            assert [f.dataType for f in ref] == [f.dataType for f in expected]
+
+
+@st.composite
+def tile_layers(draw):
+    """(rows, zoom type, fill, partitions): one tile size per layer,
+    random holes, negative keys, any IEEE double (NaN, ±inf, -0.0)."""
+    w = draw(st.sampled_from([2, 4, 6]))
+    h = draw(st.sampled_from([2, 4]))
+    keys = draw(st.sets(st.tuples(st.integers(-4, 3), st.integers(-4, 3)),
+                        min_size=1, max_size=10))
+    zoom = draw(st.integers(1, 30))
+    val = st.floats(width=64)
+    rows = [(zoom, tx, ty, w, h, draw(st.lists(val, min_size=w * h, max_size=w * h)))
+            for tx, ty in sorted(keys)]
+    zoom_t = draw(st.sampled_from(["INT", "BIGINT"]))
+    fill = draw(st.sampled_from([0.0, math.nan, -1.5]))
+    return rows, zoom_t, fill, draw(st.integers(1, 5))
+
+
+@settings(max_examples=4, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(layer=tile_layers())
+def test_pyramid_up_property_equals_sql_reference(spark, arrow_batch, layer):
+    """Every agg, at Arrow batches of 1, 7 and 4096 rows over a layer
+    spread across up to 5 partitions (some empty), equals the SQL
+    reference bit for bit, with the pre-existing output schema."""
+    from geotrellis_server_spark.operators.tiling import pyramid_up
+
+    rows, zoom_t, fill, parts = layer
+    df = spark.createDataFrame(rows, TILE_DDL.replace("zoom INT", f"zoom {zoom_t}"))
+    df = df.repartition(parts)
+
+    def all_aggs(up):
+        out = None
+        for agg in ("sum", "mean", "max"):
+            one = up(agg).withColumn("agg", F.lit(agg))
+            out = one if out is None else out.unionByName(one)
+        return {(r.agg, r.zoom, r.tile_x, r.tile_y):
+                repr((r.width, r.height, tuple(r.cells))) for r in out.collect()}
+
+    want = all_aggs(lambda agg: pyramid_up_sql_reference(df, agg, fill))
+    for n in (1, 7, 4096):
+        with arrow_batch(n):
+            assert all_aggs(lambda agg: pyramid_up(df, agg=agg, fill=fill)) == want, n
+    expected = spark.createDataFrame([], TILE_DDL.replace("zoom INT", f"zoom {zoom_t}")).schema
+    assert pyramid_up(df, fill=fill).schema == expected
 
 
 def test_pyramid_up_negative_tile_coords(spark):
@@ -205,8 +340,10 @@ def test_pyramid_up_rejects_unknown_impl(spark):
         [(3, 0, 0, 2, 2, [0.0] * 4)],
         "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>",
     )
-    with pytest.raises(ValueError, match="impl"):
-        pyramid_up(df, impl="sq1")
+    # one implementation: the former impl switch is gone from the signature
+    for impl in ("sq1", "sql", "arrow"):
+        with pytest.raises(TypeError, match="impl"):
+            pyramid_up(df, impl=impl)
 
 
 def test_pyramid_up_rejects_mixed_tile_sizes_in_a_batch(spark):
@@ -234,45 +371,69 @@ def test_pyramid_up_rejects_null_cells(spark):
 
 
 def test_list_col_offsets_and_overflow():
-    from geotrellis_server_spark.operators.tiling import _list_col
+    from geotrellis_server_spark.arrow_lists import list_col
 
-    col = _list_col(np.arange(6, dtype=np.float64).reshape(3, 2))
+    col = list_col(np.arange(6, dtype=np.float64).reshape(3, 2))
     assert col.offsets.to_pylist() == [0, 2, 4, 6]
     assert col.to_pylist() == [[0.0, 1.0], [2.0, 3.0], [4.0, 5.0]]
     # 2**16 rows x 2**15 values = 2**31: int32 offsets would wrap; a
     # zero-stride view keeps the test from allocating the values
     huge = np.broadcast_to(np.zeros(1), (2**16, 2**15))
     with pytest.raises(ValueError, match="int32 list offsets"):
-        _list_col(huge)
+        list_col(huge)
+
+
+def test_list_col_keeps_dtype():
+    from geotrellis_server_spark.arrow_lists import list_col
+
+    ints = list_col(np.array([[1, 2**40], [3, -4]], dtype=np.int64))
+    assert str(ints.type) == "list<item: int64>"
+    assert ints.to_pylist() == [[1, 2**40], [3, -4]]
+    nan = list_col(np.array([[float("nan")]]))
+    assert str(nan.type) == "list<item: double>" and np.isnan(nan.to_pylist()[0][0])
+
+
+def test_list_matrix_contract():
+    import pyarrow as pa
+
+    from geotrellis_server_spark.arrow_lists import list_matrix
+
+    col = pa.array([[9.0, 9.0], [1.0, 2.0], [3.0, 4.0]], pa.list_(pa.float32())).slice(1)
+    m = list_matrix(col, 2)
+    assert m.dtype == np.float64 and m.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    with pytest.raises(ValueError, match="NULL vector in row 1"):
+        list_matrix(pa.array([[1.0], None]), 1, "vector")
+    with pytest.raises(ValueError, match="holds 1 values, expected 2"):
+        list_matrix(pa.array([[1.0, 2.0], [1.0]]), 2)
 
 
 def test_list_rows_uses_offsets_and_checks_lengths():
     import pyarrow as pa
 
-    from geotrellis_server_spark.operators.tiling import _list_rows
+    from geotrellis_server_spark.arrow_lists import list_rows
 
     col = pa.array([[1.0, 2.0], None, [3.0, float("nan")]]).slice(1)
-    mask, offs, vals = _list_rows(col, 2)
+    mask, offs, vals = list_rows(col, 2)
     assert mask.tolist() == [True, False]
     assert vals[offs[1]:offs[2]][0] == 3.0 and np.isnan(vals[offs[2] - 1])
     with pytest.raises(ValueError, match="holds 3 values, expected 2"):
-        _list_rows(pa.array([[1.0, 2.0], [1.0, 2.0, 3.0]]), 2)
+        list_rows(pa.array([[1.0, 2.0], [1.0, 2.0, 3.0]]), 2)
 
 
 def test_batch_tile_size_contract():
     import pyarrow as pa
 
-    from geotrellis_server_spark.operators.tiling import _batch_tile_size
+    from geotrellis_server_spark.arrow_lists import batch_tile_size
 
     def batch(ws, hs):
         return pa.record_batch([pa.array(ws, pa.int32()), pa.array(hs, pa.int32())],
                                names=["width", "height"])
 
-    assert _batch_tile_size(batch([4, 4], [8, 8])) == (4, 8)
+    assert batch_tile_size(batch([4, 4], [8, 8])) == (4, 8)
     with pytest.raises(ValueError, match="one tile size per batch"):
-        _batch_tile_size(batch([4, 2], [4, 8]))
+        batch_tile_size(batch([4, 2], [4, 8]))
     with pytest.raises(ValueError, match="even tile size"):
-        _batch_tile_size(batch([3, 3], [4, 4]))
+        batch_tile_size(batch([3, 3], [4, 4]))
 
 
 def test_write_pyramid_levels_and_pruning(spark, tmp_path):
