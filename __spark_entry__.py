@@ -2013,7 +2013,7 @@ def _q_ndvi_multivar(spark: SparkSession, sf_dir: str) -> DataFrame:
     same ratio from dense per-pixel counts (exact ints → the float
     division is bit-identical)."""
     from geotrellis_server_spark.maml import ast as M
-    from geotrellis_server_spark.maml.eval import eval_local
+    from geotrellis_server_spark.maml.eval import eval_expr
 
     d = _docs(spark, sf_dir).withColumn(
         "idnum", F.expr("CAST(substring(doc_id, 5) AS BIGINT)")
@@ -2021,7 +2021,7 @@ def _q_ndvi_multivar(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = tiling.rasterize_count(d.where("idnum % 2 = 0"), 3, tile_size=16)
     b = tiling.rasterize_count(d.where("idnum % 2 = 1"), 3, tile_size=16)
     e = (M.var("a") - M.var("b")) / (M.var("a") + M.var("b"))
-    out = eval_local(e, {"a": a, "b": b})
+    out = eval_expr(e, {"a": a, "b": b})
     return out.selectExpr(
         "tile_x", "tile_y", "posexplode(cells) AS (idx, value)"
     ).selectExpr(

@@ -224,7 +224,7 @@ class Engine:
         evaluation. Pruning only the primary var would leave expression
         sources (e.g. a DEM behind a hillshade) scanned in full, and for
         focal expressions the post-filter cannot push below the halo
-        groupBy-applyInPandas."""
+        strip aggregate."""
         tiles = layer.tiles
         if key_filter is not None:
             tiles = tiles.filter(key_filter)

@@ -9,27 +9,24 @@ WebMercator grid (the tile layout's own CRS) and inverse-projected to
 lon/lat, then classified with the vectorized ray-cast kernel
 (geometry/pip.py — covers semantics: boundary pixels count as inside).
 
-Scale shape: one Arrow batch per group of tiles; cost is O(npix × ring
-edges) vectorized numpy per tile, no shuffle (the mask table is derived
-from the source tiles' keys with a narrow projection + distinct).
+Scale shape: the MAML kernel rasterizes each tile of its Arrow batch
+from the tile keys; cost is O(npix × ring edges) vectorized numpy per
+tile, with no mask table, join or shuffle.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .pip import points_in_ring
 
 
 def ring_mask_block(
-    ring, zoom: int, tile_x: int, tile_y: int, width: int, height: int
+    ring, zoom: int, tile_x: int, tile_y: int, width: int, height: int, pad: int = 0
 ) -> np.ndarray:
-    """(height, width) float array: 1.0 where the pixel center is covered
-    by the lon/lat ring, else 0.0.
+    """(height + 2·pad, width + 2·pad) float array: 1.0 where the pixel
+    center is covered by the lon/lat ring, else 0.0. The ``pad`` cells
+    are the neighbouring tiles' pixels on the same grid.
 
     Pixel centers: global pixel gx = tile_x*width + col; normalized
     mercator mx = (gx + 0.5) / (2^zoom * width); lon = mx*360 - 180;
@@ -38,34 +35,10 @@ def ring_mask_block(
     """
     nx = (1 << zoom) * width
     ny = (1 << zoom) * height
-    mx = (tile_x * width + np.arange(width, dtype=np.float64) + 0.5) / nx
-    my = (tile_y * height + np.arange(height, dtype=np.float64) + 0.5) / ny
+    mx = (tile_x * width + np.arange(-pad, width + pad, dtype=np.float64) + 0.5) / nx
+    my = (tile_y * height + np.arange(-pad, height + pad, dtype=np.float64) + 0.5) / ny
     lon = mx * 360.0 - 180.0
     lat = np.degrees(2.0 * np.arctan(np.exp(np.pi * (1.0 - 2.0 * my))) - np.pi / 2.0)
-    LON, LAT = np.meshgrid(lon, lat)  # (h, w)
-    inside = points_in_ring(LON.ravel(), LAT.ravel(), ring).reshape(height, width)
+    LON, LAT = np.meshgrid(lon, lat)  # (h + 2·pad, w + 2·pad)
+    inside = points_in_ring(LON.ravel(), LAT.ravel(), ring).reshape(LON.shape)
     return inside.astype(np.float64)
-
-
-def ring_mask_tiles(ref_tiles: DataFrame, ring) -> DataFrame:
-    """Mask-tile table aligned to ``ref_tiles``' key space: one row per
-    distinct (zoom, tile_x, tile_y[, band]) with cells ∈ {1.0, 0.0}.
-    Drops straight into the MAML ``mask`` raster operand path."""
-    ring = [tuple(map(float, p)) for p in ring]
-    key = ["zoom", "tile_x", "tile_y"]
-    if "band" in ref_tiles.columns:
-        key = key + ["band"]
-    keys = ref_tiles.select(*key, "width", "height").distinct()
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def mk(zoom_s: pd.Series, tx_s: pd.Series, ty_s: pd.Series,
-           w_s: pd.Series, h_s: pd.Series) -> pd.Series:
-        out = []
-        for z, tx, ty, w, h in zip(zoom_s, tx_s, ty_s, w_s, h_s):
-            out.append(ring_mask_block(ring, int(z), int(tx), int(ty), int(w), int(h)).ravel())
-        return pd.Series(out)
-
-    return keys.select(
-        *key, "width", "height",
-        mk("zoom", "tile_x", "tile_y", "width", "height").alias("cells"),
-    )

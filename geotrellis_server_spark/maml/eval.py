@@ -1,15 +1,14 @@
 """MAML evaluation over tile DataFrames — the engine's LayerExtent /
 LayerTms analog (core/.../LayerExtent.scala:46-66, LayerTms.scala:50-80).
 
-- ``eval_local``: n-way equi-join of the expression's raster vars on the
-  tile key (SURVEY.md J4: multi-var param alignment, e.g. red × nir for
-  NDVI) then ONE Arrow-batched pandas UDF applying the fused numpy kernel
-  to the whole batch at once (cells stacked to a (batch, npix) matrix —
-  never per-row Python).
-- ``eval_focal``: single-var expressions containing focal ops; tiles are
-  padded via the halo join (operators/focal.py — the reference's 3×3
-  neighborhood read, GTLayerNode.scala:88-130) and the kernel consumes the
-  pad.
+``eval_expr`` is the one evaluator, for local and focal expressions
+alike. Each raster var is read with the buffer its focal ops need
+(Vars.varsWithBuffer, LayerTms.scala:66): plain cells at buffer 0, the
+strips-only halo pivot (operators/focal.py) otherwise. The reads are
+equi-joined on the tile key (SURVEY.md J4: multi-var alignment, e.g.
+red × nir for NDVI), and ONE Arrow-batched pandas UDF runs the fused
+numpy kernel (maml/kernels.py) once per tile size in each batch over
+(n, h+2b, w+2b) tile stacks — never per-row Python.
 
 Tile DataFrame contract: columns (zoom, tile_x, tile_y, width, height,
 cells: array<double>); NaN = NoData.
@@ -25,62 +24,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .ast import Expr, FOCAL_OPS
+from ..operators.focal import STRIP_COLS, with_halo
+from .ast import Expr
 from .kernels import compile_node, fold_constants
 
 KEY = ["zoom", "tile_x", "tile_y"]
 
 
-def _has_focal(e: Expr) -> bool:
-    return e.symbol in FOCAL_OPS or any(_has_focal(a) for a in e.args)
+def eval_expr(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
+    """Evaluate ``expr`` over the tile DataFrames bound to its vars in
+    ``params``; one output row per tile key present in every var (the
+    key includes ``band`` when every var has one).
 
-
-def _has_geom(e: Expr) -> bool:
-    return e.symbol == "geomLit" or any(_has_geom(a) for a in e.args)
-
-
-def eval_expr(expr: Expr, params: dict[str, DataFrame], tile_size: int | None = None) -> DataFrame:
-    """Dispatch: local-only → joined batch kernel; focal → halo path.
-
-    mask-by-geometry: in the LOCAL path the geometry rasterizes inside
-    the fused kernel from the batch's tile keys (zero extra shuffle); in
-    the FOCAL path it is rewritten to a synthetic raster var first so the
-    mask participates in halo padding like any input."""
+    Local expressions read no halo and join no mask table. Geometry
+    literals (mask-by-geometry) are rasterized in the kernel from the
+    tile keys, out to the buffer of their node. Under a focal op the pad
+    cells of such a mask therefore come from the polygon even where the
+    neighbour tile is missing. The masked operand is NaN there anyway,
+    so only ``def``/``undef`` of it can tell: ``fmean(mask(def(d),
+    geom))`` counts such a cell as 0 where a NaN-padded mask tile would
+    skip it."""
     expr = fold_constants(expr)
-    if _has_focal(expr):
-        expr, params = _bind_geom_masks(expr, params)
-        return eval_focal(expr, params)
-    return eval_local(expr, params)
-
-
-def _bind_geom_masks(expr: Expr, params: dict[str, DataFrame]):
-    """Rewrite ``mask(x, geomLit)`` → ``mask(x, rasterV(__geom_mask_N))``
-    with a rasterized mask-tile table (geometry/rasterize.py) bound under
-    the synthetic name. The mask grid is derived from the first bound var
-    inside x (all vars share the tile key space — J4 alignment)."""
-    from ..geometry.rasterize import ring_mask_tiles
-
-    params = dict(params)
-    counter = [0]
-
-    def f(e: Expr) -> Expr:
-        if e.symbol == "mask" and len(e.args) == 2 and e.args[1].symbol == "geomLit":
-            sub_vars = sorted(n for n in e.args[0].var_names() if n in params)
-            if not sub_vars:
-                raise ValueError(
-                    "mask-by-geometry needs at least one bound raster var in "
-                    "the masked expression to define the tile grid"
-                )
-            name = f"__geom_mask_{counter[0]}"
-            counter[0] += 1
-            params[name] = ring_mask_tiles(params[sub_vars[0]], e.args[1].p("ring"))
-            return Expr("mask", (e.args[0], Expr.var(name)))
-        return e
-
-    return expr.transform(f), params
-
-
-def eval_local(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
     names = sorted(expr.var_names())
     if not names:
         # constant expression (e.g. fully folded scalar): there is no tile
@@ -93,6 +57,7 @@ def eval_local(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
     missing = [n for n in names if n not in params]
     if missing:
         raise KeyError(f"unbound MAML vars: {missing}")
+    pads = expr.vars_with_buffer()
     kernel = compile_node(expr)
 
     # band participates in the alignment key when every input is
@@ -102,138 +67,108 @@ def eval_local(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
     if all("band" in params[n].columns for n in names):
         key = KEY + ["band"]
 
-    dfs = []
+    reads, cols = [], []
     for n in names:
-        dfs.append(
-            params[n].select(*key, F.col("width"), F.col("height"), F.col("cells").alias(f"__c_{n}"))
-        )
-    joined = reduce(
-        lambda a, b: a.join(b.drop("width", "height"), key, "inner"), dfs[1:], dfs[0]
-    )
-
-    cell_cols = [f"__c_{n}" for n in names]
-    needs_keys = _has_geom(expr)  # geomLit rasterizes from tile keys
-    key_cols = ["zoom", "tile_x", "tile_y", "width", "height"] if needs_keys else []
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def apply_kernel(*cols: pd.Series) -> pd.Series:
-        kc = cols[: len(key_cols)]
-        cc = cols[len(key_cols):]
-        env = {n: np.stack(c.to_numpy()) for n, c in zip(names, cc)}
-        first_shape = env[names[0]].shape
-        env["__rowwise__"] = True  # (batch, npix): one tile per row
-        if needs_keys:
-            env["__keys__"] = tuple(c.to_numpy() for c in kc)
-        out = kernel(env)
-        out = np.broadcast_to(out, first_shape) if np.isscalar(out) else out
-        return pd.Series(list(np.asarray(out, dtype=np.float64)))
-
-    return joined.select(
-        *key,
-        "width",
-        "height",
-        apply_kernel(
-            *[F.col(c) for c in key_cols], *[F.col(c) for c in cell_cols]
-        ).alias("cells"),
-    )
-
-
-def eval_focal(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
-    """Focal (and mixed focal/local) expressions over one or MORE raster
-    vars: each var is halo-padded by ITS OWN required buffer
-    (Vars.varsWithBuffer — reference LayerTms.scala:66-74), the padded
-    frames are equi-joined on the tile key (J4 alignment), and the fused
-    kernel consumes the pads (local sub-ops crop operands to the common
-    pad; focal ops consume their radius)."""
-    from ..operators.focal import with_halo
-
-    names = sorted(expr.var_names())
-    bufs = expr.vars_with_buffer()
-    kernel = compile_node(expr)
-
-    key = list(KEY)
-    if all("band" in params[n].columns for n in names):
-        key = KEY + ["band"]
-
-    buf_of = {n: int(bufs.get(n, 0)) for n in names}
-    from ..operators.focal import STRIP_COLS
-
-    # per-var column layout in the kernel UDF: 1 column (cells) for an
-    # unbuffered var, 9 columns (body + 8 raw strips) for a buffered one.
-    # Halo-padded blocks are assembled with numpy BLOCK ASSIGNMENT inside
-    # the UDF we were already paying for — the JVM concat/slice build of
-    # cells_padded was ~60% of the halo step's cost, and NULL strips
-    # become NaN pads for free.
-    dfs, var_ncols = [], []
-    for i, n in enumerate(names):
-        b = buf_of[n]
-        if b <= 0:
-            picked = params[n].select(
-                *key, F.col("cells").alias(f"__c_{n}"),
-                *([F.col("width"), F.col("height")] if i == 0 else []))
-            var_ncols.append(1)
+        if pads[n]:
+            src, parts = with_halo(params[n], pads[n]), ("s_c",) + STRIP_COLS
         else:
-            raw = with_halo(params[n], b, assembled=False)
-            picked = raw.select(
-                *key, F.col("s_c").alias(f"__c_{n}"),
-                *[F.col(s).alias(f"__{n}_{s}") for s in STRIP_COLS],
-                *([F.col("width"), F.col("height")] if i == 0 else []))
-            var_ncols.append(9)
-        dfs.append(picked)
-    joined = reduce(lambda a, b: a.join(b, key, "inner"), dfs[1:], dfs[0])
-
-    pad_env = dict(buf_of)
-
-    def _assemble(w: int, h: int, b: int, body, strips) -> np.ndarray:
-        """(h+2b, w+2b) padded block from the row-major body + 8 strips
-        (corners (b,b), n/s (b,w), w/e (h,b)); None strip = NaN pad."""
-        p = np.full((h + 2 * b, w + 2 * b), np.nan, dtype=np.float64)
-        p[b:b + h, b:b + w] = np.asarray(body, dtype=np.float64).reshape(h, w)
-        nw, nn, ne, ww, ee, sw, ss, se = strips
-        spots = (
-            (nw, (slice(0, b), slice(0, b)), (b, b)),
-            (nn, (slice(0, b), slice(b, b + w)), (b, w)),
-            (ne, (slice(0, b), slice(b + w, None)), (b, b)),
-            (ww, (slice(b, b + h), slice(0, b)), (h, b)),
-            (ee, (slice(b, b + h), slice(b + w, None)), (h, b)),
-            (sw, (slice(b + h, None), slice(0, b)), (b, b)),
-            (ss, (slice(b + h, None), slice(b, b + w)), (b, w)),
-            (se, (slice(b + h, None), slice(b + w, None)), (b, b)),
-        )
-        for strip, where, shape in spots:
-            if strip is not None:
-                p[where] = np.asarray(strip, dtype=np.float64).reshape(shape)
-        return p
+            src, parts = params[n], ("cells",)
+        reads.append(src.select(*key, "width", "height",
+                                *[F.col(p).alias(f"__{n}_{p}") for p in parts]))
+        cols += [f"__{n}_{p}" for p in parts]
+    joined = reduce(
+        lambda a, b: a.join(b.drop("width", "height"), key, "inner"), reads[1:], reads[0]
+    )
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def apply_kernel(width: pd.Series, height: pd.Series, *cols: pd.Series) -> pd.Series:
-        out = []
-        col_vals = [c.to_numpy() for c in cols]  # zip, not per-row .iloc
-        for w, h, *row in zip(width.to_numpy(), height.to_numpy(), *col_vals):
-            w, h = int(w), int(h)
-            env = {"__pad__": pad_env}
-            j = 0
-            for n, nc in zip(names, var_ncols):
-                b = pad_env[n]
-                if nc == 1:
-                    env[n] = np.asarray(row[j], dtype=np.float64).reshape(h, w)
-                else:
-                    env[n] = _assemble(w, h, b, row[j], row[j + 1:j + 9])
-                j += nc
-            out.append(np.asarray(kernel(env), dtype=np.float64).ravel())
+    def tile_kernel(*series: pd.Series) -> pd.Series:
+        arrays = [s.to_numpy() for s in series]
+        tiles, lists = arrays[:5], arrays[5:]
+        sizes = np.stack(tiles[3:], axis=1)
+        out = np.empty(len(sizes), dtype=object)
+        for size in np.unique(sizes, axis=0):
+            rows = np.flatnonzero((sizes == size).all(axis=1))
+            res = run_tiles(kernel, names, pads,
+                            [a[rows] for a in tiles], [a[rows] for a in lists])
+            for i, r in zip(rows, res):
+                out[i] = r
         return pd.Series(out)
 
-    kernel_cols = []
-    for n, nc in zip(names, var_ncols):
-        kernel_cols.append(F.col(f"__c_{n}"))
-        if nc == 9:
-            kernel_cols += [F.col(f"__{n}_{s}") for s in STRIP_COLS]
     return joined.select(
-        *key,
-        "width",
-        "height",
-        apply_kernel(F.col("width"), F.col("height"), *kernel_cols).alias("cells"),
+        *key, "width", "height",
+        tile_kernel(*KEY, "width", "height", *cols).alias("cells"),
     )
+
+
+def run_tiles(kernel, names, pads, tiles, lists) -> np.ndarray:
+    """``compile_node``'s closure over n tiles of ONE size: the kernel
+    entry of ``eval_expr``'s UDF. ``tiles`` holds the (zoom, tile_x,
+    tile_y, width, height) arrays; ``lists`` holds, per var in ``names``
+    order, the cells column at buffer 0, else the ``with_halo`` body and
+    8 strip columns (NULL strip = NaN pad). Returns the (n, h*w) float64
+    result rows."""
+    env, j = {}, 0
+    for n in names:
+        k = 9 if pads[n] else 1
+        env[n] = _stack(tiles, pads[n], lists[j:j + k])
+        j += k
+    res = np.asarray(kernel(env, tiles), dtype=np.float64)
+    n, w, h = len(tiles[0]), int(tiles[3][0]), int(tiles[4][0])
+    if res.ndim == 0:
+        res = np.broadcast_to(res, (n, h, w))
+    return res.reshape(n, -1)
+
+
+def _lens(col: np.ndarray) -> np.ndarray:
+    """Length of each list row; -1 for a NULL row."""
+    return np.fromiter((-1 if v is None else len(v) for v in col), np.int64, len(col))
+
+
+def _stack(tiles, b: int, lists) -> np.ndarray:
+    """(n, h+2b, w+2b) float64 stack of n same-sized tiles from their
+    body column and, for b > 0, their 8 halo strip columns."""
+    zoom, tx, ty, ws, hs = tiles
+    n, w, h = len(zoom), int(ws[0]), int(hs[0])
+
+    def key(i):
+        return (int(zoom[i]), int(tx[i]), int(ty[i]))
+
+    body = lists[0]
+    lens = _lens(body)
+    if (lens != w * h).any():
+        i = int(np.argmax(lens != w * h))
+        got = "NULL cells" if lens[i] < 0 else f"{lens[i]} cells"
+        raise ValueError(f"the {w}x{h} tile {key(i)} holds {got}")
+    cells = np.stack(body).reshape(n, h, w)
+    if not b:
+        return cells
+    out = np.full((n, h + 2 * b, w + 2 * b), np.nan)
+    out[:, b:b + h, b:b + w] = cells
+    e, s = b + w, b + h  # first east column, first south row
+    spots = (  # STRIP_COLS order: side, padded-block rows, cols
+        ("north-west", slice(0, b), slice(0, b)),
+        ("north", slice(0, b), slice(b, e)),
+        ("north-east", slice(0, b), slice(e, e + b)),
+        ("west", slice(b, s), slice(0, b)),
+        ("east", slice(b, s), slice(e, e + b)),
+        ("south-west", slice(s, s + b), slice(0, b)),
+        ("south", slice(s, s + b), slice(b, e)),
+        ("south-east", slice(s, s + b), slice(e, e + b)),
+    )
+    for strip, (side, rs, cs) in zip(lists[1:], spots):
+        shape = (rs.stop - rs.start, cs.stop - cs.start)
+        lens = _lens(strip)
+        bad = (lens >= 0) & (lens != shape[0] * shape[1])
+        if bad.any():
+            i = int(np.argmax(bad))
+            dim = "width" if side in ("north", "south") else "height"
+            raise ValueError(
+                f"focal neighbours must share one tile size: the {side} "
+                f"neighbour of the {w}x{h} tile {key(i)} has {dim} {lens[i] // b}")
+        have = np.flatnonzero(lens >= 0)
+        if len(have):
+            out[have, rs, cs] = np.stack(strip[have]).reshape(len(have), *shape)
+    return out
 
 
 def crop_to_extent(

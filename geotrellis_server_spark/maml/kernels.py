@@ -12,10 +12,12 @@ core/src/test/.../NoDataHandlingTest.scala:35-58):
 - def/undef return 1/0 (never NaN);
 - classify/ifelse/clamp keep NaN cells NaN.
 
-Focal ops operate on 2D blocks padded by the expression's buffer
-(Vars.varsWithBuffer analog): each compiled node returns (array, pad) and
-local ops align operands by cropping to the smaller pad — mirroring the
-reference's TileWithNeighbors.withBuffer 3×3 read
+Arrays are tile stacks indexed ``[..., rows, cols]``: one (h, w) tile
+or an (n, h, w) batch of same-sized tiles. Each var's tiles are padded
+by its buffer from ``Expr.vars_with_buffer`` (Vars.varsWithBuffer
+analog): each compiled node returns (array, pad) and local ops align
+operands by cropping to the smaller pad — mirroring the reference's
+TileWithNeighbors.withBuffer 3×3 read
 (core/.../gtlayer/GTLayerNode.scala:88-124).
 """
 
@@ -28,7 +30,7 @@ import numpy as np
 
 from .ast import Expr, FOCAL_OPS
 
-Env = dict  # name -> np.ndarray (local path: any shape; focal path: 2D padded)
+Env = dict  # var name -> tile stack padded by the var's buffer
 
 
 def _crop(a: np.ndarray, pad: int, to: int) -> np.ndarray:
@@ -73,26 +75,31 @@ def _fold(op, args):
     return out
 
 
-def _windows(a2d: np.ndarray, r: int) -> np.ndarray:
-    """(h+2r, w+2r) padded block → (h, w, 2r+1, 2r+1) window view."""
+def _windows(a: np.ndarray, r: int) -> np.ndarray:
+    """[..., h+2r, w+2r] padded tiles → [..., h, w, 2r+1, 2r+1] window
+    view."""
     from numpy.lib.stride_tricks import sliding_window_view
 
-    return sliding_window_view(a2d, (2 * r + 1, 2 * r + 1))
+    return sliding_window_view(a, (2 * r + 1, 2 * r + 1), axis=(-2, -1))
 
 
-def _shift_reduce(a2d: np.ndarray, r: int, op) -> np.ndarray:
+def _centre(a: np.ndarray, r: int) -> np.ndarray:
+    return a[..., r:-r or None, r:-r or None]
+
+
+def _shift_reduce(a: np.ndarray, r: int, op) -> np.ndarray:
     """Separable (2r+1)² window reduce by shifted-slice accumulation:
     rows first, then columns — 2(2r+1) whole-array ops on contiguous
     slices instead of a nan-reduce over a 4-D strided window view
     (measured 9× on 64² tiles at r=1). ``op`` must be associative and
     NaN-transparent in the accumulation sense used below."""
-    h, w = a2d.shape
-    rows = a2d[0:h - 2 * r, :]
+    h, w = a.shape[-2:]
+    rows = a[..., 0:h - 2 * r, :]
     for dy in range(1, 2 * r + 1):
-        rows = op(rows, a2d[dy:h - 2 * r + dy, :])
-    out = rows[:, 0:w - 2 * r]
+        rows = op(rows, a[..., dy:h - 2 * r + dy, :])
+    out = rows[..., 0:w - 2 * r]
     for dx in range(1, 2 * r + 1):
-        out = op(out, rows[:, dx:w - 2 * r + dx])
+        out = op(out, rows[..., dx:w - 2 * r + dx])
     return out
 
 
@@ -120,8 +127,7 @@ def _focal_reduce(kind: str):
                         c = _shift_reduce((~nan).astype(np.float64), r,
                                           np.add)
                         out = s / c  # 0/0 → NaN = nanmean's all-NaN
-            centre = a[r:-r or None, r:-r or None]
-            return np.where(np.isnan(centre), np.nan, out)
+            return np.where(np.isnan(_centre(a, r)), np.nan, out)
 
         return f
 
@@ -135,25 +141,24 @@ def _focal_reduce(kind: str):
         with np.errstate(all="ignore"):
             out = red(w, axis=(-2, -1))
         # cells whose own value is NoData stay NoData (TargetCell.data)
-        centre = a[r:-r or None, r:-r or None]
-        return np.where(np.isnan(centre), np.nan, out)
+        return np.where(np.isnan(_centre(a, r)), np.nan, out)
 
     return f
 
 
 def _focal_mode(a, r):
-    w = _windows(a, r).reshape(*a.shape[:2] and (a.shape[0] - 2 * r, a.shape[1] - 2 * r), -1)
-    h, wd, n = w.shape
-    out = np.full((h, wd), np.nan)
-    for i in range(h):  # mode lacks a vectorized nan-aware numpy form;
-        for j in range(wd):  # tiles are 256², this is per-tile not per-row
-            vals = w[i, j]
-            vals = vals[~np.isnan(vals)]
-            if len(vals):
-                u, c = np.unique(vals, return_counts=True)
-                out[i, j] = u[np.argmax(c)]
-    centre = a[r:-r or None, r:-r or None]
-    return np.where(np.isnan(centre), np.nan, out)
+    """Most frequent non-NaN value of each window; ties pick the
+    smallest value, all-NaN windows give NaN."""
+    w = _windows(a, r)
+    out = np.full(w.shape[:-2], np.nan)
+    flat = out.reshape(-1)
+    # mode lacks a vectorized nan-aware numpy form: one loop step per cell
+    for i, vals in enumerate(w.reshape(flat.size, -1)):
+        vals = vals[~np.isnan(vals)]
+        if len(vals):
+            u, c = np.unique(vals, return_counts=True)
+            flat[i] = u[np.argmax(c)]
+    return np.where(np.isnan(_centre(a, r)), np.nan, out)
 
 
 def _horn_gradients(a: np.ndarray, cellsize: float):
@@ -163,9 +168,9 @@ def _horn_gradients(a: np.ndarray, cellsize: float):
     arctan — never here (applying it to the gradients AND the arctan would
     square it)."""
     c = a
-    tl, t, tr = c[:-2, :-2], c[:-2, 1:-1], c[:-2, 2:]
-    l, r = c[1:-1, :-2], c[1:-1, 2:]
-    bl, b, br = c[2:, :-2], c[2:, 1:-1], c[2:, 2:]
+    tl, t, tr = c[..., :-2, :-2], c[..., :-2, 1:-1], c[..., :-2, 2:]
+    l, r = c[..., 1:-1, :-2], c[..., 1:-1, 2:]
+    bl, b, br = c[..., 2:, :-2], c[..., 2:, 1:-1], c[..., 2:, 2:]
     dzdx = ((tr + 2 * r + br) - (tl + 2 * l + bl)) / (8.0 * cellsize)
     dzdy = ((bl + 2 * b + br) - (tl + 2 * t + tr)) / (8.0 * cellsize)
     return dzdx, dzdy
@@ -217,11 +222,17 @@ def fold_constants(e: Expr) -> Expr:
     return e.transform(f)
 
 
-def compile_node(e: Expr) -> Callable[[Env], np.ndarray]:
-    fn, _pad = _compile(e)
+def compile_node(e: Expr) -> Callable[..., np.ndarray]:
+    """The whole tree as ONE closure ``run(env, tiles=None)``.
 
-    def run(env: Env):
-        out, pad = fn(env)
+    ``env`` maps each var to its tile stack padded by the var's buffer
+    from ``e.vars_with_buffer()``. ``tiles`` holds the (zoom, tile_x,
+    tile_y, width, height) arrays of the stack's n tiles; only geometry
+    literals read it. Returns the unpadded result."""
+    fn = _compile(e, 0, e.vars_with_buffer())
+
+    def run(env: Env, tiles=None):
+        out, pad = fn(env, tiles)
         if pad and hasattr(out, "ndim") and out.ndim >= 2:
             out = out[..., pad:-pad or None, pad:-pad or None]
         return out
@@ -229,43 +240,41 @@ def compile_node(e: Expr) -> Callable[[Env], np.ndarray]:
     return run
 
 
-def _compile(e: Expr):
-    """Returns fn(env) -> (array, pad)."""
+def _compile(e: Expr, buf: int, pads: dict[str, int]):
+    """Returns fn(env, tiles) -> (array, pad). ``buf`` is the halo this
+    node's output must carry: the radii of the focal ops above it."""
     s = e.symbol
     if s in ("int", "dbl"):
         v = float(e.p("value"))
-        return (lambda env: (v, 10 ** 9)), 0
+        return lambda env, tiles: (v, 10 ** 9)
     if s == "bool":
         v = 1.0 if e.p("value") else 0.0
-        return (lambda env: (v, 10 ** 9)), 0
+        return lambda env, tiles: (v, 10 ** 9)
     if s == "rasterV":
         name = e.p("name")
-        pad = e.p("pad", 0)
-        return (lambda env: (env[name], env.get("__pad__", {}).get(name, 0))), 0
+        pad = pads[name]
+        return lambda env, tiles: (env[name], pad)
     if s == "geomLit":
-        # local-path geometry literal: rasterized IN the fused kernel from
-        # the batch's tile keys (env["__keys__"], provided by eval_local)
-        # — no mask-tile DataFrame, no join, no shuffle. The focal path
-        # instead rewrites geomLit to a halo-padded raster var
-        # (eval._bind_geom_masks), which this branch never sees.
+        # rasterized IN the fused kernel from the stack's tile keys, out
+        # to this node's buffer: pad cells come from the polygon, so a
+        # geometry mask needs no mask-tile table, join or halo exchange.
         ring = [tuple(float(v) for v in p) for p in e.p("ring")]
 
-        def f(env):
+        def f(env, tiles):
             from ..geometry.rasterize import ring_mask_block
 
-            zs, xs, ys, ws, hs = env["__keys__"]
-            blocks = [
-                ring_mask_block(ring, int(z), int(x), int(y), int(w), int(h)).ravel()
-                for z, x, y, w, h in zip(zs, xs, ys, ws, hs)
-            ]
-            return np.stack(blocks), 0
+            return np.stack([
+                ring_mask_block(ring, int(z), int(x), int(y), int(w), int(h), pad=buf)
+                for z, x, y, w, h in zip(*tiles)
+            ]), buf
 
-        return f, 0
+        return f
 
-    subs = [_compile(a)[0] for a in e.args]
+    child = buf + int(e.p("radius", 1)) if s in FOCAL_OPS else buf
+    subs = [_compile(a, child, pads) for a in e.args]
 
-    def arrs(env):
-        vals = [f(env) for f in subs]
+    def arrs(env, tiles):
+        vals = [f(env, tiles) for f in subs]
         real = [(a, p) for a, p in vals if not np.isscalar(a)]
         if not real:
             return [a for a, _ in vals], 0
@@ -274,8 +283,8 @@ def _compile(e: Expr):
         return [next(it) if not np.isscalar(a) else a for a, p in vals], m
 
     def mk(op):
-        def f(env):
-            a, m = arrs(env)
+        def f(env, tiles):
+            a, m = arrs(env, tiles)
             with np.errstate(all="ignore"):
                 return op(a), m
 
@@ -324,131 +333,128 @@ def _compile(e: Expr):
         ),
     }
     if s in simple:
-        return mk(simple[s]), 0
+        return mk(simple[s])
 
     if s == "ifelse":
-        def f(env):
-            (c, x, y), m = arrs(env)
+        def f(env, tiles):
+            (c, x, y), m = arrs(env, tiles)
             c = np.asarray(c, dtype=np.float64)
             out = np.where(c != 0, x, y)
             return _nan_where(np.isnan(c), out), m
 
-        return f, 0
+        return f
     if s == "classify":
         breaks = np.asarray(e.p("breaks"), dtype=np.float64)
         values = np.asarray(e.p("values"), dtype=np.float64)
 
-        def f(env):
-            (x,), m = arrs(env)
+        def f(env, tiles):
+            (x,), m = arrs(env, tiles)
             x = np.asarray(x, dtype=np.float64)
             idx = np.clip(np.digitize(x, breaks), 0, len(values) - 1)
             return _nan_where(np.isnan(x), values[idx]), m
 
-        return f, 0
+        return f
     if s == "clamp":
         lo, hi = e.p("lo"), e.p("hi")
-        return mk(lambda a: np.clip(a[0], lo, hi)), 0
+        return mk(lambda a: np.clip(a[0], lo, hi))
     if s == "normalize":
         a0, a1 = e.p("old_min"), e.p("old_max")
         b0, b1 = e.p("new_min"), e.p("new_max")
 
-        def f(env):
-            (x,), m = arrs(env)
+        def f(env, tiles):
+            (x,), m = arrs(env, tiles)
             return (np.asarray(x) - a0) / (a1 - a0) * (b1 - b0) + b0, m
 
-        return f, 0
+        return f
     if s == "rescale":
         b0, b1 = e.p("new_min"), e.p("new_max")
 
-        def f(env):
-            # per-TILE min/max — in the local path arrays are (batch, npix)
-            # with one tile per row (env flag set by eval_local), so reduce
-            # per row; using batch-wide extrema would make output depend on
-            # Arrow batch composition (nondeterministic across partitions).
-            (x,), m = arrs(env)
+        def f(env, tiles):
+            # per-TILE min/max over the trailing (rows, cols) axes:
+            # batch-wide extrema would make output depend on Arrow batch
+            # composition (nondeterministic across partitions).
+            (x,), m = arrs(env, tiles)
             x = np.asarray(x, dtype=np.float64)
+            axes = tuple(range(-min(x.ndim, 2), 0))
             with np.errstate(all="ignore"):
-                if env.get("__rowwise__") and x.ndim == 2:
-                    a0 = np.nanmin(x, axis=-1, keepdims=True)
-                    a1 = np.nanmax(x, axis=-1, keepdims=True)
-                else:
-                    a0, a1 = np.nanmin(x), np.nanmax(x)
+                a0 = np.nanmin(x, axis=axes, keepdims=True)
+                a1 = np.nanmax(x, axis=axes, keepdims=True)
             span = np.where((a1 - a0) == 0, 1.0, a1 - a0)
             return (x - a0) / span * (b1 - b0) + b0, m
 
-        return f, 0
+        return f
     if s == "mask":
-        def f(env):
-            (x, mk_), m = arrs(env)
+        def f(env, tiles):
+            (x, mk_), m = arrs(env, tiles)
             mk_ = np.asarray(mk_, dtype=np.float64)
             return np.where(np.isnan(mk_) | (mk_ == 0), np.nan, x), m
 
-        return f, 0
+        return f
     if s == "rgb":
-        def f(env):
-            a, m = arrs(env)
+        def f(env, tiles):
+            a, m = arrs(env, tiles)
             return np.stack(a, axis=-1), m
 
-        return f, 0
+        return f
     if s == "sel":
         band = int(e.p("band", 0))
 
-        def f(env):
-            (x,), m = arrs(env)
+        def f(env, tiles):
+            (x,), m = arrs(env, tiles)
             return np.asarray(x)[..., band], m
 
-        return f, 0
+        return f
 
     if s in FOCAL_OPS:
         r = int(e.p("radius", 1))
         if s in ("fmax", "fmin", "fmean", "fmedian", "fsum", "fstddev"):
             op = _focal_reduce(s)
 
-            def f(env, op=op, r=r):
-                (x,), m = arrs(env)
+            def f(env, tiles, op=op, r=r):
+                (x,), m = arrs(env, tiles)
                 return op(np.asarray(x, dtype=np.float64), r), m - r
 
-            return f, r
+            return f
         if s == "fmode":
-            def f(env, r=r):
-                (x,), m = arrs(env)
+            def f(env, tiles, r=r):
+                (x,), m = arrs(env, tiles)
                 return _focal_mode(np.asarray(x, dtype=np.float64), r), m - r
 
-            return f, r
+            return f
         if s == "fslope":
             cs, zf = float(e.p("cellsize", 1.0)), float(e.p("z_factor", 1.0))
 
-            def f(env):
-                (x,), m = arrs(env)
+            def f(env, tiles):
+                (x,), m = arrs(env, tiles)
                 return _fslope(np.asarray(x, dtype=np.float64), 1, cs, zf), m - 1
 
-            return f, 1
+            return f
         if s == "faspect":
             cs = float(e.p("cellsize", 1.0))
 
-            def f(env, cs=cs):
-                (x,), m = arrs(env)
+            def f(env, tiles, cs=cs):
+                (x,), m = arrs(env, tiles)
                 return _faspect(np.asarray(x, dtype=np.float64), 1, cs), m - 1
 
-            return f, 1
+            return f
         if s == "fhillshade":
             cs, zf = float(e.p("cellsize", 1.0)), float(e.p("z_factor", 1.0))
             az, alt = float(e.p("azimuth", 315.0)), float(e.p("altitude", 45.0))
 
-            def f(env):
-                (x,), m = arrs(env)
+            def f(env, tiles):
+                (x,), m = arrs(env, tiles)
                 return _fhillshade(np.asarray(x, dtype=np.float64), 1, cs, zf, az, alt), m - 1
 
-            return f, 1
+            return f
 
     if s in CUSTOM_KERNELS:
         op = CUSTOM_KERNELS[s]
 
-        def f(env):
-            a, m = arrs(env)
+        def f(env, tiles):
+            a, m = arrs(env, tiles)
             return op(a), m
 
-        return f, 0
+        return f
 
     raise ValueError(f"unhandled MAML symbol: {s}")  # UnhandledCase analog
 

@@ -3,12 +3,13 @@ equivalent of the reference's 3×3 neighborhood read + buffer
 (core/.../gtlayer/GTLayerNode.scala:88-124: GridBounds(x±1, y±1) →
 NeighboringTiles → TileWithNeighbors.withBuffer).
 
-Shape: each tile row emits its full cells to ITSELF plus eight edge
-STRIPS (r rows/cols/corners, sliced JVM-side with slice()/flatten()
-BEFORE the shuffle) to its neighbors; one groupBy(target key) aggregate
-pivots the ≤9 strips into columns and JVM array ops assemble the
-(h+2r, w+2r) padded block — no Python anywhere in the exchange. Missing
-neighbors pad with NaN (world edge / sparse layer).
+Shape: each tile row emits eight edge STRIPS (r rows/cols/corners,
+sliced JVM-side with slice()/flatten() BEFORE the shuffle) to its
+neighbors; one groupBy(target key) aggregate pivots the ≤8 strips into
+columns, which join back to the tile bodies — no Python anywhere in the
+exchange. The consumer (the MAML kernel, maml/eval.py) assembles the
+(h+2r, w+2r) padded blocks in numpy; a NULL strip (world edge / sparse
+layer) pads with NaN there.
 
 Scale notes: only the strips enter the exchange — 2r(w+h) + 4r² bytes
 per tile (≈25× less than naive full copies at 64 px, r=1; the tile
@@ -35,14 +36,14 @@ def _strip_sql(r: int) -> str:
     """Per-offset pre-shuffle slice: the sub-block of THIS tile that lands
     in the (dx, dy) neighbor's padded halo. dx=+1 → east edge cols
     [w-r, w); dx=-1 → west edge cols [0, r); dx=0 → all cols (rows
-    likewise with dy and h). Emitted as 9 structs then exploded — one
+    likewise with dy and h). Emitted as 8 structs then exploded — one
     scan, sliced before the exchange."""
     x0 = f"IF(o.dx = 1, width - {r}, 0)"
     y0 = f"IF(o.dy = 1, height - {r}, 0)"
     ylen = f"IF(o.dy = 0, height, {r})"
-    # three cost tiers: center = zero-copy reference; row strips (dx=0) =
-    # ONE contiguous slice; column strips = per-row r-element slices (the
-    # only per-row work, and it is r wide)
+    # two cost tiers: row strips (dx=0) = ONE contiguous slice; column
+    # strips = per-row r-element slices (the only per-row work, and it is
+    # r wide)
     if r == 1:  # common case: column strip = one element per row, no flatten
         col = (
             f"transform(sequence({y0}, {y0} + {ylen} - 1), "
@@ -55,7 +56,6 @@ def _strip_sql(r: int) -> str:
         )
     return (
         "CASE "
-        "WHEN o.dx = 0 AND o.dy = 0 THEN cells "
         f"WHEN o.dx = 0 THEN slice(cells, ({y0}) * width + 1, ({ylen}) * width) "
         f"ELSE {col} END"
     )
@@ -64,26 +64,24 @@ def _strip_sql(r: int) -> str:
 STRIP_COLS = ("s_nw", "s_n", "s_ne", "s_w", "s_e", "s_sw", "s_s", "s_se")
 
 
-def with_halo(tiles: DataFrame, radius: int,
-              assembled: bool = True) -> DataFrame:
-    """tiles(zoom, tile_x, tile_y[, band], width, height, cells) →
-    (key..., width, height, cells_padded) where cells_padded is the
-    (h+2r)*(w+2r) row-major block (NaN outside contributing neighbors).
-    Band-aware when a ``band`` column is present (each band exchanges its
-    own halo). Only tile keys present in the input appear in the output
-    (neighbor copies alone don't materialize a tile — matches the
-    reference reading neighbors *of* an existing tile).
+def with_halo(tiles: DataFrame, radius: int) -> DataFrame:
+    """tiles(zoom, tile_x, tile_y[, band], width, height, cells) → the
+    raw halo pivot (key..., width, height, s_c, s_nw..s_se): the tile
+    body ``s_c`` plus the eight neighbor strips of ``radius`` cells,
+    NULL for absent neighbors. Corner strips are (r, r), n/s (r, w),
+    w/e (h, r), all row-major. Band-aware when a ``band`` column is
+    present (each band exchanges its own halo). Only tile keys present
+    in the input appear in the output (neighbor copies alone don't
+    materialize a tile — matches the reference reading neighbors *of*
+    an existing tile).
 
-    ``assembled=False`` returns the RAW pivot instead: (key..., width,
-    height, s_c, s_nw..s_se) with NULL for absent neighbors — for
-    consumers that already cross into Python (the MAML fused kernel's
-    pandas UDF), where numpy block assignment beats the JVM
-    concat/slice padded-array build (measured: the SQL assembly was
-    ~60% of q9's halo step) and Arrow ships strictly fewer bytes."""
+    Padded blocks are assembled by the consumer in numpy, inside the
+    Python UDF it already pays for: the former JVM concat/slice build
+    was ~60% of q9's halo step, and Arrow ships strictly fewer bytes."""
     r = int(radius)
-    key = KEY + (["band"] if "band" in tiles.columns else [])
     if r <= 0:
-        return tiles.select(*key, "width", "height", F.col("cells").alias("cells_padded"))
+        raise ValueError(f"with_halo needs radius >= 1, got {radius}")
+    key = KEY + (["band"] if "band" in tiles.columns else [])
 
     # 8 NEIGHBOR offsets only — the tile's own body never enters the
     # exchange: strips shuffle (2r(w+h)+4r² per tile), then the pivoted
@@ -110,14 +108,13 @@ def with_halo(tiles: DataFrame, radius: int,
             F.expr(_strip_sql(r)).alias("strip"),
         )
     )
-    # Assembly is pure SQL: pivot the ≤9 strips per target key into named
-    # columns with ONE aggregate (any_value over a when() — map-side
-    # combinable, groups bounded ≤9 rows), then build the (h+2r)·(w+2r)
-    # row-major block with JVM transform/slice/concat. The previous
-    # applyInPandas paid a fixed Python/pandas invocation per tile key —
-    # microseconds of numpy behind ~1 ms of overhead × millions of tiles
-    # (round-2 verdict, What's wrong #3). Here the whole loop stays inside
-    # whole-stage codegen.
+    # Pivot the ≤8 strips per target key into named columns with ONE
+    # aggregate (any_value over a when() — map-side combinable, groups
+    # bounded ≤8 rows). The earlier applyInPandas paid a fixed
+    # Python/pandas invocation per tile key — microseconds of numpy
+    # behind ~1 ms of overhead × millions of tiles (round-2 verdict,
+    # What's wrong #3). Here the whole exchange stays inside whole-stage
+    # codegen.
     #
     # Placement (contributor at (-dx,-dy) relative to target): dx=+1 fills
     # the target's WEST pad, dx=-1 the EAST; dy=+1 NORTH, dy=-1 SOUTH.
@@ -132,39 +129,9 @@ def with_halo(tiles: DataFrame, radius: int,
         pick(1, 0).alias("s_w"), pick(-1, 0).alias("s_e"),
         pick(1, -1).alias("s_sw"), pick(0, -1).alias("s_s"), pick(-1, -1).alias("s_se"),
     )
-    # INNER join keeps only real tiles (a key existing solely as a halo
-    # contribution is someone's neighbor, not a tile) and supplies the
+    # Joining tiles LEFT with halos keeps only real tiles (a key existing
+    # solely as a halo contribution is someone's neighbor, not a tile),
+    # keeps halo-less (isolated) tiles with NULL strips, and supplies the
     # centre body without it ever having been shuffled as a strip row.
-    # Halo-less tiles (isolated keys) survive via the left join + NaN
-    # fills below — so join tiles LEFT with halos.
-    pivoted = tiles.select(*key, "width", "height",
-                           F.col("cells").alias("s_c")).join(halos, key, "left")
-    if not assembled:
-        return pivoted
-
-    nan = "CAST('NaN' AS DOUBLE)"
-    fill = {  # NaN pads for missing neighbors, sized per strip shape
-        "s_nw": f"array_repeat({nan}, {r * r})", "s_ne": f"array_repeat({nan}, {r * r})",
-        "s_sw": f"array_repeat({nan}, {r * r})", "s_se": f"array_repeat({nan}, {r * r})",
-        "s_n": f"array_repeat({nan}, {r} * width)", "s_s": f"array_repeat({nan}, {r} * width)",
-        "s_w": f"array_repeat({nan}, height * {r})", "s_e": f"array_repeat({nan}, height * {r})",
-    }
-    g = {k: f"coalesce({k}, {v})" for k, v in fill.items()}
-
-    def band_rows(nrows: str, left: str, mid: str, right: str) -> str:
-        # one padded output row = west cols ++ centre cols ++ east cols
-        return (
-            f"flatten(transform(sequence(0, {nrows} - 1), y -> concat("
-            f"slice({left}, y * {r} + 1, {r}), "
-            f"slice({mid}, y * width + 1, width), "
-            f"slice({right}, y * {r} + 1, {r}))))"
-        )
-
-    padded = (
-        f"concat({band_rows(str(r), g['s_nw'], g['s_n'], g['s_ne'])}, "
-        f"{band_rows('height', g['s_w'], 's_c', g['s_e'])}, "
-        f"{band_rows(str(r), g['s_sw'], g['s_s'], g['s_se'])})"
-    )
-    return pivoted.select(
-        *key, "width", "height", F.expr(padded).alias("cells_padded")
-    )
+    return tiles.select(*key, "width", "height",
+                        F.col("cells").alias("s_c")).join(halos, key, "left")

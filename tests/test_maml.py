@@ -4,6 +4,7 @@ NoData→NaN semantics (NoDataHandlingTest.scala:28-58), crop golden sum
 round-trip, constant folding, custom kernel registry."""
 
 import math
+from functools import reduce
 
 import numpy as np
 import pytest
@@ -17,7 +18,7 @@ def cells_np(cells):
 
 from geotrellis_server_spark.maml import ast as M
 from geotrellis_server_spark.maml.ast import Expr
-from geotrellis_server_spark.maml.eval import crop_to_extent, eval_expr, eval_local
+from geotrellis_server_spark.maml.eval import crop_to_extent, eval_expr
 from geotrellis_server_spark.maml.kernels import compile_node, fold_constants, register_kernel
 from geotrellis_server_spark.sources import synth
 
@@ -108,7 +109,7 @@ def test_ndvi_over_tiles(spark):
     red = tile_df(spark, "red", range(1, 17))
     nir = tile_df(spark, "nir", range(17, 33))
     e = (M.var("nir") - M.var("red")) / (M.var("nir") + M.var("red"))
-    out = eval_local(e, {"red": red, "nir": nir}).collect()
+    out = eval_expr(e, {"red": red, "nir": nir}).collect()
     assert len(out) == 1
     r = np.arange(1, 17, dtype=float)
     n = np.arange(17, 33, dtype=float)
@@ -122,7 +123,7 @@ def test_layer_extent_crop_golden_1596(spark):
 
     r8 = synth.raster8(spark)
     out = crop_to_extent(
-        eval_local(M.var("r8"), {"r8": r8}),
+        eval_expr(M.var("r8"), {"r8": r8}),
         (0.0, 1.0, 8.0, 8.0),
         lambda z, tx, ty: Extent(0.0, 0.0, 8.0, 8.0),
     ).collect()[0]
@@ -136,7 +137,7 @@ def test_nodata_over_tiles(spark):
     v2 = [float("nan") if v == 2.0 else float(v) for v in range(1, 101)]
     t1 = tile_df(spark, "t1", v1, w=10, h=10)
     t2 = tile_df(spark, "t2", v2, w=10, h=10)
-    out = eval_local(M.var("t1") + M.var("t2"), {"t1": t1, "t2": t2}).collect()[0]
+    out = eval_expr(M.var("t1") + M.var("t2"), {"t1": t1, "t2": t2}).collect()[0]
     cells = cells_np(out.cells)
     assert np.isnan(cells[0]) and np.isnan(cells[1])
     assert cells[2] == 6.0 and not np.isnan(cells[2:]).any()
@@ -217,7 +218,7 @@ def test_slope_hillshade_z_factor_applied_once():
 
 def test_eval_local_constant_expression_raises():
     with pytest.raises(ValueError, match="no raster vars"):
-        eval_local(fold_constants(M.lit(2) + M.lit(3)), {})
+        eval_expr(fold_constants(M.lit(2) + M.lit(3)), {})
 
 
 def test_media_ref_no_bigint_overflow(spark):
@@ -316,3 +317,161 @@ def test_faspect_via_eval(spark):
     assert np.all(np.isnan(strip[0, :])) and np.all(np.isnan(strip[-1, :]))
     assert np.all(np.isnan(strip[:, 0])) and np.all(np.isnan(strip[:, -1]))
     assert np.allclose(strip[1:-1, 1:-1], 270.0)
+
+
+# ---------------------------------------------------------------------------
+# batch composition: tile sizes, per-tile rescale, masks under focal ops
+# ---------------------------------------------------------------------------
+
+BATCH_SIZES = (1, 7, 4096)
+
+
+def test_local_expression_over_mixed_tile_sizes(spark, arrow_batch):
+    """A layer with 4×4 and 8×8 tiles evaluates the same whether or not
+    the two sizes share an Arrow batch (coalesce(1) puts them in one
+    partition)."""
+    small = np.arange(16, dtype=float)
+    big = np.arange(64, dtype=float) * 0.5
+    tiles = tile_df(spark, "d", small, key=(3, 1, 1)).union(
+        tile_df(spark, "d", big, w=8, h=8, key=(3, 2, 1))).coalesce(1)
+    e = M.var("d") * 2.0 + 1.0
+    for n in BATCH_SIZES:
+        with arrow_batch(n):
+            got = {r.tile_x: (r.width, r.height, cells_np(r.cells))
+                   for r in eval_expr(e, {"d": tiles}).collect()}
+        assert got.keys() == {1, 2}, n
+        assert got[1][:2] == (4, 4) and got[2][:2] == (8, 8)
+        assert np.array_equal(got[1][2], small * 2.0 + 1.0), n
+        assert np.array_equal(got[2][2], big * 2.0 + 1.0), n
+
+
+def test_focal_neighbours_of_different_sizes_raise(spark):
+    tiles = tile_df(spark, "d", np.zeros(16), key=(1, 0, 0)).union(
+        tile_df(spark, "d", np.zeros(64), w=8, h=8, key=(1, 1, 0)))
+    with pytest.raises(Exception, match=r"ValueError: focal neighbours must share "
+                                        r"one tile size: .* the \dx\d tile .* height \d"):
+        eval_expr(M.focal("fsum", M.var("d"), radius=1), {"d": tiles}).collect()
+
+
+def test_rescale_is_per_tile_whatever_the_batch(spark, arrow_batch):
+    """rescale maps each tile's own [min, max] onto the target range,
+    independent of which tiles share an Arrow batch."""
+    rng = np.random.default_rng(11)
+    vals, frames = {}, []
+    for i in range(12):
+        lo, span = float(i * 10 - 40), float(2 ** (i % 5))
+        v = lo + span * rng.random(16)
+        v[rng.random(16) < 0.2] = np.nan
+        v[0], v[1] = lo, lo + span  # pin each tile's own extrema
+        vals[i] = v
+        frames.append(tile_df(spark, "d", v, key=(4, i, 3)))
+    tiles = reduce(lambda a, b: a.union(b), frames).coalesce(1)
+    e = M.rescale(M.var("d"), -1.0, 1.0)
+    for n in BATCH_SIZES:
+        with arrow_batch(n):
+            got = {r.tile_x: cells_np(r.cells) for r in eval_expr(e, {"d": tiles}).collect()}
+        assert got.keys() == vals.keys(), n
+        for i, v in vals.items():
+            lo, hi = np.nanmin(v), np.nanmax(v)
+            assert np.allclose(got[i], (v - lo) / (hi - lo) * 2.0 - 1.0, equal_nan=True), (n, i)
+
+
+def _windows_oracle(padded, r, reduce_fn):
+    """Per-cell reduce over the (2r+1)² window of a NaN-padded grid; a
+    cell whose own value is NaN stays NaN."""
+    h, w = padded.shape[0] - 2 * r, padded.shape[1] - 2 * r
+    out = np.full((h, w), np.nan)
+    for i in range(h):
+        for j in range(w):
+            if not np.isnan(padded[i + r, j + r]):
+                out[i, j] = reduce_fn(padded[i:i + 2 * r + 1, j:j + 2 * r + 1])
+    return out
+
+
+def _nanmean(win):
+    v = win[~np.isnan(win)]
+    return v.sum() / len(v) if len(v) else np.nan
+
+
+def test_geometry_mask_under_focal_ops(spark):
+    """fmean(mask(d, geom)) and mask(fmean(d), geom) over a 3×2 tile grid
+    with one missing tile, against a numpy oracle on the stitched grid:
+    the polygon (the concave U of test_rasterize) crosses tile edges, so
+    the fmean windows read masked halo cells of the neighbours."""
+    from geotrellis_server_spark.geometry.rasterize import ring_mask_block
+
+    ring = [(-60.0, 40.0), (0.0, 40.0), (0.0, 80.0), (-20.0, 80.0),
+            (-20.0, 60.0), (-40.0, 60.0), (-40.0, 80.0), (-60.0, 80.0)]
+    z, s, missing = 2, 8, (2, 1)
+    rng = np.random.default_rng(3)
+    grid = rng.integers(1, 9, (2 * s, 3 * s)).astype(float)
+    grid[rng.random(grid.shape) < 0.1] = np.nan
+    msk = np.zeros_like(grid)
+    frames = []
+    for tx in range(3):
+        for ty in range(2):
+            blk = (slice(ty * s, ty * s + s), slice(tx * s, tx * s + s))
+            msk[blk] = ring_mask_block(ring, z, tx, ty, s, s)
+            if (tx, ty) == missing:
+                grid[blk] = np.nan
+            else:
+                frames.append(tile_df(spark, "d", grid[blk].ravel(), w=s, h=s, key=(z, tx, ty)))
+    tiles = reduce(lambda a, b: a.union(b), frames)
+    assert 0 < msk.sum() < msk.size
+
+    def pad(a):
+        p = np.full((a.shape[0] + 2, a.shape[1] + 2), np.nan)
+        p[1:-1, 1:-1] = a
+        return p
+
+    masked = np.where(msk == 1, grid, np.nan)
+    want = {
+        "fmean(mask)": _windows_oracle(pad(masked), 1, _nanmean),
+        "mask(fmean)": np.where(msk == 1, _windows_oracle(pad(grid), 1, _nanmean), np.nan),
+    }
+    exprs = {
+        "fmean(mask)": M.focal("fmean", M.mask(M.var("d"), M.geom(ring)), radius=1),
+        "mask(fmean)": M.mask(M.focal("fmean", M.var("d"), radius=1), M.geom(ring)),
+    }
+    for name, e in exprs.items():
+        out = {(r.tile_x, r.tile_y): cells_np(r.cells).reshape(s, s)
+               for r in eval_expr(e, {"d": tiles}).collect()}
+        assert len(out) == 5 and missing not in out, name
+        for (tx, ty), got in out.items():
+            exp = want[name][ty * s:ty * s + s, tx * s:tx * s + s]
+            np.testing.assert_allclose(got, exp, rtol=1e-15, err_msg=f"{name} {(tx, ty)}")
+
+
+def _mode(win):
+    v = win[~np.isnan(win)]
+    if not len(v):
+        return np.nan
+    counts = {}
+    for x in v.tolist():
+        counts[x] = counts.get(x, 0) + 1
+    best = max(counts.values())
+    return min(x for x, c in counts.items() if c == best)  # ties → smallest
+
+
+@pytest.mark.parametrize("r", [1, 2])
+def test_fmode_nan_holes_match_naive_windows(r):
+    """fmode over NaN-holed stacks of 1 and several tiles (and a bare 2-D
+    tile) against a naive per-window mode; ties pick the smallest value
+    and all-NaN windows give NaN."""
+    from geotrellis_server_spark.maml.kernels import _focal_mode
+
+    rng = np.random.default_rng(100 + r)
+    for case in range(12):
+        n = 1 if case % 3 == 0 else int(rng.integers(2, 5))
+        h, w = int(rng.integers(2, 7)), int(rng.integers(2, 7))
+        stack = rng.integers(0, 4, (n, h + 2 * r, w + 2 * r)).astype(float)
+        stack[rng.random(stack.shape) < rng.uniform(0.1, 0.7)] = np.nan
+        if case % 4 == 1:  # the first cell's whole window is NaN
+            stack[0, : 2 * r + 1, : 2 * r + 1] = np.nan
+        got = _focal_mode(stack, r)
+        assert got.shape == (n, h, w)
+        for t in range(n):
+            exp = _windows_oracle(stack[t], r, _mode)
+            np.testing.assert_array_equal(got[t], exp, err_msg=f"case {case} tile {t}")
+        np.testing.assert_array_equal(_focal_mode(stack[0], r), got[0])
+    assert np.isnan(_focal_mode(np.full((1, 3 + 2 * r, 3 + 2 * r), np.nan), r)).all()

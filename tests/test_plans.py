@@ -127,6 +127,48 @@ def test_focal_halo_reuses_input_partitioning(spark):
     tiles.unpersist()
 
 
+def test_maml_local_mask_is_one_python_node_without_join(spark):
+    """A local expression with a geometry mask reads plain cells and
+    rasterizes the polygon in its one kernel: no halo, no mask-table
+    join, no Exchange."""
+    from geotrellis_server_spark.maml import ast as M
+    from geotrellis_server_spark.maml.eval import eval_expr
+
+    rows = [("d", 2, tx, ty, 0, 8, 8, 0.0, 0.0, 1.0, 1.0, "float64", float("nan"),
+             [1.0] * 64) for tx in range(2) for ty in range(2)]
+    tiles = spark.createDataFrame(rows, synth.TILE_SCHEMA)
+    ring = [(-60.0, 40.0), (0.0, 40.0), (0.0, 80.0), (-60.0, 80.0)]
+    plan = _plan(eval_expr(M.mask(M.var("d") * 2.0, M.geom(ring)), {"d": tiles}))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+
+
+def test_maml_focal_is_one_python_node_exchanging_only_strips(spark):
+    """A focal expression over a table bucketed by the tile key: one
+    kernel node, and every Exchange sits on the strips side of the
+    halo join — the tile bodies come straight from the scan."""
+    import re
+
+    from geotrellis_server_spark.maml import ast as M
+    from geotrellis_server_spark.maml.eval import eval_expr
+    from geotrellis_server_spark.sources import bucketed
+
+    d = synth.extract_geometry(synth.docs(spark, 2000))
+    bucketed.materialize_tile_pyramid(tiling.rasterize_count(d, 3, tile_size=8),
+                                      "t_plan_focal", n_buckets=8)
+    try:
+        plan = _plan(eval_expr(M.focal("fmean", M.var("d"), radius=1),
+                               {"d": spark.table("t_plan_focal")}))
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
+        body = re.search(r"Join [^\n]*\n\s*:-(.*?)\n\s*\+-", plan, re.S)
+        assert body is not None and "Exchange" not in body.group(1), plan
+        assert plan[body.end():].count("Exchange") == plan.count("Exchange") >= 1, plan
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_plan_focal")
+
+
 def test_kmeans_assignment_is_shuffle_free(spark):
     """The final k-means assignment pass must be scan -> Arrow kernel
     with NO Exchange: centroids ride inside the kernel closure."""

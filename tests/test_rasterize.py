@@ -6,7 +6,7 @@ import math
 
 import numpy as np
 
-from geotrellis_server_spark.geometry.rasterize import ring_mask_block, ring_mask_tiles
+from geotrellis_server_spark.geometry.rasterize import ring_mask_block
 from geotrellis_server_spark.maml import ast as M
 from geotrellis_server_spark.maml.eval import eval_expr
 from geotrellis_server_spark.sources import synth
@@ -93,17 +93,6 @@ def test_mask_by_geometry_end_to_end(spark):
                 assert v is None or (isinstance(v, float) and math.isnan(v))
                 n_out += 1
     assert n_in > 0 and n_out > 0
-
-
-def test_ring_mask_tiles_dataframe(spark):
-    rows = [("d", 2, 1, 1, 0, 4, 4, 0.0, 0.0, 1.0, 1.0, "float64", float("nan"),
-             [0.0] * 16)]
-    tiles = spark.createDataFrame(rows, synth.TILE_SCHEMA)
-    mdf = ring_mask_tiles(tiles, U_RING)
-    r = mdf.collect()[0]
-    exp = ring_mask_block(U_RING, 2, 1, 1, 4, 4).ravel()
-    assert np.allclose([0.0 if v is None else v for v in r.cells], exp)
-    assert "band" in mdf.columns  # ref has band → mask aligned band-aware
 
 
 def test_polygon_stats_known_shapes(spark):
