@@ -76,7 +76,7 @@ def hull_points(
     """Per-group hull vertices in CCW order: (group, seq, x, y,
     n_vertices, area2) — area2 the exact doubled shoelace area."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pts = list(zip(pdf[x_col].astype(np.int64),
                        pdf[y_col].astype(np.int64)))
         hull = monotone_chain([(int(x), int(y)) for x, y in pts])
@@ -114,7 +114,7 @@ def hull_diameter(
     here since h is tiny; rotating calipers is the O(h) drop-in if a
     group's hull ever grows large. Exact BIGINT throughout."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pts = [(int(x), int(y))
                for x, y in zip(pdf[x_col].astype(np.int64),
                                pdf[y_col].astype(np.int64))]

@@ -1,18 +1,14 @@
 """Quadtree cell index over WebMercator — the engine's H3/S2 equivalent.
 
-h3-py is unavailable in this environment, so the engine ships its own
-deterministic cell scheme: a cell at resolution ``r`` is the WebMercator
-tile (r, cx, cy), packed as ``cell = cx * 2^r + cy`` (bigint, unique within
-a resolution). This supports everything the north rule needs from H3:
+The engine ships its own deterministic cell scheme: a cell at resolution
+``r`` is the WebMercator tile (r, cx, cy), packed as
+``cell = cx * 2^r + cy`` (bigint, unique within a resolution). It gives
+what the north rule needs from H3:
 
-- point → cell encoding (pure SQL floor math → whole-stage codegen),
-- ``grid_disk(cell, k)``: all cells within Chebyshev ring k (kNN ring
-  expansion, SURVEY.md J6),
+- point → cell encoding (pure SQL floor math → whole-stage codegen; the
+  kNN ring loop explodes its cell disks in SQL from the same key),
 - prefix coarsening: parent at res r-1 is (cx>>1, cy>>1) — used for
   range-partitioning shuffles by cell prefix (north rule).
-
-An optional real-H3 backend can be slotted in behind the same API when
-h3-py is present (import-try below).
 """
 
 from __future__ import annotations
@@ -23,13 +19,6 @@ from pyspark.sql import functions as F
 
 from .. import sqlgen
 from .layout import tile_key_np
-
-try:  # pragma: no cover - h3 not present in this environment
-    import h3  # noqa: F401
-
-    HAS_H3 = True
-except ImportError:
-    HAS_H3 = False
 
 
 def cell_key_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
@@ -48,44 +37,6 @@ def cell_parent(cell: int, res: int, parent_res: int) -> int:
     return (cx >> shift) * (1 << parent_res) + (cy >> shift)
 
 
-def grid_disk(cell: int, res: int, k: int) -> list[int]:
-    """All cells within Chebyshev distance k (the (2k+1)² square block),
-    clipped at the antimeridian-free world edge. Equivalent role to h3
-    ``grid_disk`` in the reference's kNN mapping (SURVEY.md J6)."""
-    n = 1 << res
-    cx, cy = cell_xy(cell, res)
-    out = []
-    for dx in range(-k, k + 1):
-        x = cx + dx
-        if x < 0 or x >= n:
-            continue
-        for dy in range(-k, k + 1):
-            y = cy + dy
-            if 0 <= y < n:
-                out.append(x * n + y)
-    return out
-
-
-def grid_ring(cell: int, res: int, k: int) -> list[int]:
-    """Hollow ring at exactly Chebyshev distance k."""
-    if k == 0:
-        return [cell]
-    n = 1 << res
-    cx, cy = cell_xy(cell, res)
-    out = []
-    for dx in range(-k, k + 1):
-        x = cx + dx
-        if x < 0 or x >= n:
-            continue
-        for dy in range(-k, k + 1):
-            if max(abs(dx), abs(dy)) != k:
-                continue
-            y = cy + dy
-            if 0 <= y < n:
-                out.append(x * n + y)
-    return out
-
-
 # --- Spark column builders (delegate to sqlgen so oracle SQL matches) ------
 
 
@@ -99,17 +50,3 @@ def tile_x_col(lon_col: str, zoom: int) -> Column:
 
 def tile_y_col(lat_col: str, zoom: int) -> Column:
     return F.expr(sqlgen.tile_y_sql(lat_col, zoom))
-
-
-def cell_bounds(cell: int, res: int) -> tuple[float, float, float, float]:
-    """Cell → (lon_min, lat_min, lon_max, lat_max) in EPSG:4326."""
-    from .layout import mercator_to_lonlat, WEBMERCATOR_BOUND
-
-    n = 1 << res
-    cx, cy = cell_xy(cell, res)
-    w = 2.0 * WEBMERCATOR_BOUND / n
-    x0 = -WEBMERCATOR_BOUND + cx * w
-    y1 = WEBMERCATOR_BOUND - cy * w
-    lon0, lat0 = mercator_to_lonlat(np.array([x0]), np.array([y1 - w]))
-    lon1, lat1 = mercator_to_lonlat(np.array([x0 + w]), np.array([y1]))
-    return float(lon0[0]), float(lat0[0]), float(lon1[0]), float(lat1[0])

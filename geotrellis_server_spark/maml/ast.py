@@ -45,6 +45,9 @@ FOCAL_OPS = {
     "fslope", "faspect", "fhillshade",
 }
 
+# Horn's method reads a fixed 3×3 window, whatever the radius
+HORN_OPS = {"fslope", "faspect", "fhillshade"}
+
 LEAF_OPS = {"int", "dbl", "bool", "rasterV", "geomLit"}
 
 
@@ -119,13 +122,21 @@ class Expr:
             out |= a.var_names()
         return out
 
+    def halo(self) -> int:
+        """Cells this node reads beyond each tile edge: a focal op's
+        radius (exactly 1 for the Horn ops), 0 for any other node."""
+        if self.symbol not in FOCAL_OPS:
+            return 0
+        r = int(self.p("radius", 1))
+        if self.symbol in HORN_OPS and r != 1:
+            raise ValueError(f"{self.symbol} reads a fixed 3x3 window: radius must be 1, got {r}")
+        return r
+
     def vars_with_buffer(self, _depth_buffer: int = 0) -> dict[str, int]:
         """var name → required halo buffer in cells (focal ops add their
-        neighborhood radius; nested focal ops accumulate)."""
+        :meth:`halo`; nested focal ops accumulate)."""
         out: dict[str, int] = {}
-        buf = _depth_buffer
-        if self.symbol in FOCAL_OPS:
-            buf += int(self.p("radius", 1))
+        buf = _depth_buffer + self.halo()
         if self.symbol == "rasterV":
             name = self.p("name")
             out[name] = max(out.get(name, 0), _depth_buffer)
@@ -240,4 +251,6 @@ def geom(ring) -> Expr:
 
 def focal(symbol: str, x, radius: int = 1, **kw) -> Expr:
     params = [("radius", int(radius))] + sorted(kw.items())
-    return Expr(symbol, (_e(x),), tuple(params))
+    e = Expr(symbol, (_e(x),), tuple(params))
+    e.halo()  # rejects a Horn op's radius other than 1 where it is written
+    return e

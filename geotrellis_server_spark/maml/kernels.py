@@ -176,12 +176,12 @@ def _horn_gradients(a: np.ndarray, cellsize: float):
     return dzdx, dzdy
 
 
-def _fslope(a, radius, cellsize=1.0, z_factor=1.0):
+def _fslope(a, cellsize=1.0, z_factor=1.0):
     dzdx, dzdy = _horn_gradients(a, cellsize)
     return np.degrees(np.arctan(z_factor * np.sqrt(dzdx * dzdx + dzdy * dzdy)))
 
 
-def _faspect(a, radius, cellsize=1.0):
+def _faspect(a, cellsize=1.0):
     """Compass azimuth of steepest DESCENT in degrees [0, 360), 0 = north,
     clockwise (GeoTrellis focal Aspect semantics). Horn gradients:
     dzdx = eastward, dzdy = southward (rows grow south), so the descent
@@ -192,7 +192,7 @@ def _faspect(a, radius, cellsize=1.0):
     return np.where((dzdx == 0) & (dzdy == 0), np.nan, az)
 
 
-def _fhillshade(a, radius, cellsize=1.0, z_factor=1.0, azimuth=315.0, altitude=45.0):
+def _fhillshade(a, cellsize=1.0, z_factor=1.0, azimuth=315.0, altitude=45.0):
     dzdx, dzdy = _horn_gradients(a, cellsize)
     slope = np.arctan(z_factor * np.sqrt(dzdx * dzdx + dzdy * dzdy))
     aspect = np.arctan2(dzdy, -dzdx)
@@ -228,16 +228,11 @@ def compile_node(e: Expr) -> Callable[..., np.ndarray]:
     ``env`` maps each var to its tile stack padded by the var's buffer
     from ``e.vars_with_buffer()``. ``tiles`` holds the (zoom, tile_x,
     tile_y, width, height) arrays of the stack's n tiles; only geometry
-    literals read it. Returns the unpadded result."""
+    literals read it. Returns the unpadded result: every focal node
+    crops exactly the halo it adds to its input's buffer, so the
+    deepest read of each var comes out of the root at pad 0."""
     fn = _compile(e, 0, e.vars_with_buffer())
-
-    def run(env: Env, tiles=None):
-        out, pad = fn(env, tiles)
-        if pad and hasattr(out, "ndim") and out.ndim >= 2:
-            out = out[..., pad:-pad or None, pad:-pad or None]
-        return out
-
-    return run
+    return lambda env, tiles=None: fn(env, tiles)[0]
 
 
 def _compile(e: Expr, buf: int, pads: dict[str, int]):
@@ -270,7 +265,7 @@ def _compile(e: Expr, buf: int, pads: dict[str, int]):
 
         return f
 
-    child = buf + int(e.p("radius", 1)) if s in FOCAL_OPS else buf
+    child = buf + e.halo()
     subs = [_compile(a, child, pads) for a in e.args]
 
     def arrs(env, tiles):
@@ -406,7 +401,7 @@ def _compile(e: Expr, buf: int, pads: dict[str, int]):
         return f
 
     if s in FOCAL_OPS:
-        r = int(e.p("radius", 1))
+        r = e.halo()
         if s in ("fmax", "fmin", "fmean", "fmedian", "fsum", "fstddev"):
             op = _focal_reduce(s)
 
@@ -426,7 +421,7 @@ def _compile(e: Expr, buf: int, pads: dict[str, int]):
 
             def f(env, tiles):
                 (x,), m = arrs(env, tiles)
-                return _fslope(np.asarray(x, dtype=np.float64), 1, cs, zf), m - 1
+                return _fslope(np.asarray(x, dtype=np.float64), cs, zf), m - 1
 
             return f
         if s == "faspect":
@@ -434,7 +429,7 @@ def _compile(e: Expr, buf: int, pads: dict[str, int]):
 
             def f(env, tiles, cs=cs):
                 (x,), m = arrs(env, tiles)
-                return _faspect(np.asarray(x, dtype=np.float64), 1, cs), m - 1
+                return _faspect(np.asarray(x, dtype=np.float64), cs), m - 1
 
             return f
         if s == "fhillshade":
@@ -443,7 +438,7 @@ def _compile(e: Expr, buf: int, pads: dict[str, int]):
 
             def f(env, tiles):
                 (x,), m = arrs(env, tiles)
-                return _fhillshade(np.asarray(x, dtype=np.float64), 1, cs, zf, az, alt), m - 1
+                return _fhillshade(np.asarray(x, dtype=np.float64), cs, zf, az, alt), m - 1
 
             return f
 

@@ -287,7 +287,7 @@ def simplify_trajectories(
         T.StructField("y", T.LongType()),
     ])
 
-    def dp(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def dp(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([ts_col, id_col]).reset_index(drop=True)
         xs = pdf[x_col].to_numpy(np.int64)
         ys = pdf[y_col].to_numpy(np.int64)

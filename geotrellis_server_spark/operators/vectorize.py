@@ -69,7 +69,7 @@ def region_label(
         T.StructField("v", T.LongType()), T.StructField("lbl", T.LongType()),
     ])
 
-    def label_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def label_block(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         xs = pdf["cx"].to_numpy(np.int64)
         ys = pdf["cy"].to_numpy(np.int64)
         vs = pdf["v"].to_numpy(np.int64)

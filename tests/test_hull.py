@@ -76,6 +76,16 @@ def test_spark_hull_per_group(spark):
     assert g2[0].n_vertices == 3 and g2[0].area2 == 8
 
 
+def test_spark_hull_eval_type_is_inferred_from_hints(spark):
+    import warnings
+
+    df = spark.createDataFrame([(1, 0, 0), (1, 2, 0), (1, 0, 2)], "group long, x long, y long")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        hull_points(df).collect()
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+
+
 def test_diameter_vs_all_pairs_brute_force(spark):
     rng = random.Random(7)
     rows = []

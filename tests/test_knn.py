@@ -26,12 +26,29 @@ def test_knn_exact_various_queries(spark):
         assert got == _brute(pdf, qlon, qlat, 7), f"query {qid}"
 
 
-def test_knn_forces_ring_expansion(spark):
-    # k larger than any initial disk can hold at coarse res → must expand
+def _count_rings(monkeypatch, df) -> list:
+    """Patch ``persist`` on ``df``'s class: each kNN ring persists its
+    top-k once, so the returned list grows by one per ring."""
+    rings = []
+    cls = type(df)
+    persist = cls.persist
+
+    def counting_persist(self, *a, **kw):
+        rings.append(self)
+        return persist(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "persist", counting_persist)
+    return rings
+
+
+def test_knn_forces_ring_expansion(spark, monkeypatch):
+    # k larger than the first disk holds at coarse res → must expand
     d = synth.extract_geometry(synth.docs(spark, 400))
     pdf = d.select("doc_id", "lon", "lat").toPandas()
-    res = knn.knn_join(d, [(0, 0.0, 0.0)], k=50, res=6, initial_ring=1).toPandas()
+    rings = _count_rings(monkeypatch, d)
+    res = knn.knn_join(d, [(0, 0.0, 0.0)], k=50, res=6).toPandas()
     assert res.sort_values("rank").doc_id.tolist() == _brute(pdf, 0.0, 0.0, 50)
+    assert len(rings) >= 2
 
 
 def test_knn_k_exceeds_population(spark):

@@ -89,6 +89,26 @@ def test_vars_with_buffer():
     assert nested.vars_with_buffer() == {"dem": 2}
 
 
+def test_horn_ops_read_a_one_cell_halo():
+    d = M.var("d")
+    for op in ("fslope", "faspect", "fhillshade"):
+        assert M.focal(op, d).vars_with_buffer() == {"d": 1}
+        with pytest.raises(ValueError, match=op):
+            M.focal(op, d, radius=2)
+    # a node read from JSON skips focal(); its halo is checked all the same
+    e = Expr.from_dict({"symbol": "fslope", "args": [d.to_dict()], "radius": 2})
+    with pytest.raises(ValueError, match="fslope"):
+        e.vars_with_buffer()
+
+
+def test_rgb_over_focal_keeps_its_band_axis():
+    d = M.var("d")
+    stack = np.random.default_rng(0).random((2, 12, 12))  # padded by 1
+    out = compile_node(M.rgb(M.focal("fslope", d), d, d))({"d": stack})
+    assert out.shape == (2, 10, 10, 3)
+    np.testing.assert_array_equal(out[..., 1], stack[:, 1:-1, 1:-1])
+
+
 def test_custom_kernel_registry():
     register_kernel("plus1", lambda a: a[0] + 1.0)
     out = compile_node(Expr("plus1", (M.var("x"),)))({"x": np.array([1.0, 2.0])})
@@ -201,10 +221,10 @@ def test_slope_hillshade_z_factor_applied_once():
     x = np.arange(6, dtype=np.float64)
     plane = np.tile(3.0 * x, (6, 1))  # padded 6x6 → interior 4x4
     zf = 2.0
-    slope = _fslope(plane, 1, cellsize=1.0, z_factor=zf)
+    slope = _fslope(plane, cellsize=1.0, z_factor=zf)
     assert np.allclose(slope, math.degrees(math.atan(zf * 3.0)))
 
-    shade = _fhillshade(plane, 1, cellsize=1.0, z_factor=zf, azimuth=315.0, altitude=45.0)
+    shade = _fhillshade(plane, cellsize=1.0, z_factor=zf, azimuth=315.0, altitude=45.0)
     # direct formula with z applied exactly once
     sl = math.atan(zf * 3.0)
     aspect = math.atan2(0.0, -3.0)
@@ -288,18 +308,18 @@ def test_faspect_cardinal_planes():
 
     x = np.arange(6, dtype=np.float64)
     east_up = np.tile(x, (6, 1))          # z grows east → descent west
-    assert np.allclose(_faspect(east_up, 1), 270.0)
+    assert np.allclose(_faspect(east_up), 270.0)
     south_up = np.tile(x, (6, 1)).T       # z grows south → descent north
-    assert np.allclose(_faspect(south_up, 1), 0.0)
+    assert np.allclose(_faspect(south_up), 0.0)
     west_up = east_up[:, ::-1]            # z grows west → descent east
-    assert np.allclose(_faspect(west_up, 1), 90.0)
+    assert np.allclose(_faspect(west_up), 90.0)
     north_up = south_up[::-1, :]          # z grows north → descent south
-    assert np.allclose(_faspect(north_up, 1), 180.0)
+    assert np.allclose(_faspect(north_up), 180.0)
     # diagonal: z grows NE → descent SW = 225
     ne = east_up + north_up
-    assert np.allclose(_faspect(np.ascontiguousarray(ne), 1), 225.0)
+    assert np.allclose(_faspect(np.ascontiguousarray(ne)), 225.0)
     # flat → NaN
-    assert np.all(np.isnan(_faspect(np.zeros((5, 5)), 1)))
+    assert np.all(np.isnan(_faspect(np.zeros((5, 5)))))
 
 
 def test_faspect_via_eval(spark):

@@ -264,6 +264,42 @@ def test_knn_ring_join_parses_geometry_once(spark, docs_parquet, monkeypatch):
     assert len(_parse_ops(plans[0])) == 1, "\n".join(_parse_ops(plans[0]))
 
 
+def test_knn_rings_read_pending_from_local_relation(spark, monkeypatch):
+    import re
+
+    from geotrellis_server_spark.operators import knn
+
+    d = synth.extract_geometry(synth.docs(spark, 400))
+    # each ring's top-k is persisted; record its executed and analysed
+    # plans as it is persisted
+    executed, analysed = [], []
+    cls = type(d)
+    persist = cls.persist
+
+    def recording_persist(self, *a, **kw):
+        qe = self._jdf.queryExecution()
+        executed.append(qe.executedPlan().toString())
+        analysed.append(qe.analyzed().toString())
+        return persist(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "persist", recording_persist)
+    # a frame built from a Python list plans as Scan ExistingRDD: the
+    # ring loop must read it once and re-plan the pending queries as a
+    # local relation, not re-read (or nest) the input each ring
+    queries = spark.createDataFrame(
+        [(0, 0.0, 0.0)], "query_id BIGINT, qlon DOUBLE, qlat DOUBLE")
+    knn.knn_join_bulk(d, queries, k=50, res=6)
+
+    def joins(plan: str) -> int:
+        return sum(1 for line in plan.splitlines() if re.match(r"^[\s:+|-]*Join ", line))
+
+    assert len(executed) >= 2, "the case must run more than one ring"
+    for plan in executed:
+        assert "LocalTableScan" in plan, plan
+        assert "Scan ExistingRDD" not in plan, plan
+    assert joins(analysed[0]) == joins(analysed[-1]), analysed[-1]
+
+
 def test_tile_counts_parses_geometry_once(spark, docs_parquet):
     d = synth.extract_geometry(spark.read.parquet(docs_parquet))
     assert len(_parse_ops(_plan(tiling.tile_counts(d, 8)))) == 1
