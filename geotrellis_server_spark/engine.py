@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import itertools
 from dataclasses import dataclass, field
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -20,8 +21,9 @@ from pyspark.sql import functions as F
 
 from .grids.layout import Extent, ZoomedLayoutScheme
 from .maml import ast as M
-from .maml.eval import crop_to_extent, eval_expr
+from .maml.eval import align_key, compile_expr, crop_to_extent, eval_expr, run_tiles
 from .operators import histogram as H
+from .operators.focal import STRIP_OFFSETS, halo_strips
 from .query import ast as Q
 from .query.compile import ogc_layer_predicate
 from .styles import colormap as CM
@@ -68,6 +70,11 @@ class Layer:
             self._meta["m"] = (tile_px, zooms)
         return self._meta["m"]
 
+    def vars(self) -> dict[str, DataFrame]:
+        """The raster vars a MAML expression binds: ``sources``, plus the
+        layer's own tiles under its name unless a source takes it."""
+        return {self.name: self.tiles, **self.sources}
+
 
 def _supported_epsg() -> list:
     """Every CRS the engine serves requests in: the hub pair, all 60 UTM
@@ -94,6 +101,27 @@ def _tile_png(cells, w: int, h: int, style: dict | None) -> bytes:
     return encode_png(CM.render_rgba(a))
 
 
+def _cells(row):
+    """A collected tile's cells as float64 (NULL cell -> NaN), like the
+    Arrow batches ``eval_expr``'s UDF reads; None for NULL cells."""
+    return None if row.cells is None else np.asarray(row.cells, dtype=np.float64)
+
+
+def _grid(row):
+    """A neighbour tile as its (h, w) float64 grid; None when it is
+    absent or has NULL cells (``with_halo`` gives a NULL strip)."""
+    c = None if row is None else _cells(row)
+    return None if c is None else c.reshape(row.height, row.width)
+
+
+def _objects(values) -> np.ndarray:
+    """A 1-D object array, the shape of an Arrow list column in pandas."""
+    out = np.empty(len(values), dtype=object)
+    for i, v in enumerate(values):
+        out[i] = v
+    return out
+
+
 class Engine:
     def __init__(self, spark: SparkSession, layers: dict[str, Layer], catalog: DataFrame | None = None):
         self.spark = spark
@@ -108,29 +136,35 @@ class Engine:
     # -- O6: cached render (GetMap.scala:42-43,66-73 tile cache) -----------
     def get_tile_png(self, layer_name: str, z: int, x: int, y: int) -> bytes | None:
         """GetTile + style + PNG encode, memoized on the full request key.
-        Returns the PNG bytes of the (z, x, y) tile, or None if the layer
-        has no tile there.
+        Returns the PNG bytes of the (z, x, y) tile (its lowest band), or
+        None if the layer has no tile there.
 
-        Only the tile's ``width, height, cells`` row is collected; the
-        style LUT and PNG encode run here, in-process, through the same
-        ``_tile_png`` that ``render_png``'s UDF calls (reference
-        Render.scala renders in the server process too). Encoding one
-        request-sized tile takes well under a millisecond, while sending
-        it through a pandas UDF adds an ArrowEvalPython stage whose Python
-        task alone costs 130-250 ms of worker start-up per request.
+        The tile is evaluated on the driver by ``_request_tile``: one
+        JVM-only job collects the raw tile (with its 3×3 neighbourhood
+        under focal ops) and the MAML kernel runs in-process. The style
+        LUT and PNG encode run here too, through the same ``_tile_png``
+        that ``render_png``'s UDF calls (reference LayerTms.scala /
+        Render.scala evaluate and render in the server process). The
+        bulk ``render_png(get_tile(...))`` gives the same bytes, but
+        plans a halo exchange and a pandas UDF job for the ≤ 9 tiles: on
+        a 4-core host (32-px z6 pyramid) a focal request took 1.6-2.3 s
+        that way and 0.23-0.35 s here (p50 per run), where the one
+        collect job and its parquet scan are most of the cost.
 
         The key carries the Layer's generation stamp (unique per instance,
         never reused — unlike id()), so replacing a layer (``set_layer``
         or a direct ``engine.layers[name] = ...``) can never serve tiles
         rendered from the old tables/style; stale entries age out of the
         32-entry LRU."""
-        layer = self.layers[layer_name]
+        layer = self._tile_layer(layer_name, z, x, y)
         key = ("tile_png", layer_name, layer.generation, z, x, y)
 
         def compute() -> bytes | None:
-            tile = self.get_tile(layer_name, z, x, y)
-            row = tile.select("width", "height", "cells").first()
-            return _tile_png(row.cells, row.width, row.height, layer.style) if row else None
+            tile = self._request_tile(layer, z, x, y)
+            if tile is None:
+                return None
+            row, cells = tile
+            return _tile_png(cells, row.width, row.height, layer.style)
 
         return self.request_cache.get_or(key, compute)
 
@@ -232,19 +266,15 @@ class Engine:
             return tiles
         params = {
             n: (df.filter(key_filter) if key_filter is not None else df)
-            for n, df in layer.sources.items()
+            for n, df in layer.vars().items()
         }
-        params.setdefault(layer.name, tiles)
         return eval_expr(layer.expression, params)
 
     # -- E2/E6: WMTS GetTile / TMS z/x/y -----------------------------------
     def get_tile(self, layer_name: str, z: int, x: int, y: int) -> DataFrame:
         """Point lookup on the pyramid: zoom + key filter = partition
         pruning, then kernel eval on the ≤9 tiles involved."""
-        from .validate import validate_get_tile
-
-        layer = self.layers[layer_name]
-        validate_get_tile(z, x, y, scheme=layer.scheme)
+        layer = self._tile_layer(layer_name, z, x, y)
         key_filter = (
             (F.col("zoom") == z)
             & F.col("tile_x").between(x - 1, x + 1)
@@ -252,6 +282,69 @@ class Engine:
         )
         out = self._eval(layer, key_filter)
         return out.filter((F.col("tile_x") == x) & (F.col("tile_y") == y))
+
+    def _tile_layer(self, layer_name: str, z: int, x: int, y: int) -> Layer:
+        """The layer a GetTile request names, once the (z, x, y) key is
+        checked against its tile matrix set."""
+        from .validate import validate_get_tile
+
+        layer = self.layers[layer_name]
+        validate_get_tile(z, x, y, scheme=layer.scheme)
+        return layer
+
+    # -- request path: one tile, evaluated on the driver -------------------
+    def _request_tile(self, layer: Layer, z: int, x: int, y: int):
+        """Evaluate ``layer`` at the tile (z, x, y) on the driver:
+        ``(row, cells)`` for its lowest band, or None when a var has no
+        tile there. ``row`` carries width and height; ``cells`` is the
+        raw list for a layer without expression, else the kernel's
+        float64 array.
+
+        One JVM-only job collects the raw tile of every var, with its 3×3
+        neighbourhood for a var with a halo buffer. The 8 halo strips are
+        sliced in numpy (``halo_strips``, the layout of ``with_halo``) and
+        fed with the body to ``run_tiles``, the kernel of ``eval_expr``'s
+        UDF, which also rasterizes geometry masks. No halo exchange and no
+        Python worker: the bulk path's plan and jobs cost far more than
+        the numpy work on ≤ 9 tiles.
+
+        The vars align on band only when every var has one
+        (``align_key``); otherwise each var gives its lowest band, which
+        is one of the pairs the bulk join makes."""
+        params = layer.vars()
+        if layer.expression is None:
+            names, pads, kernel = [layer.name], {layer.name: 0}, None
+        else:
+            names, pads, kernel = compile_expr(layer.expression, params)
+        banded = "band" in align_key(params[n] for n in names)
+        near = F.col("tile_x").between(x - 1, x + 1) & F.col("tile_y").between(y - 1, y + 1)
+        here = (F.col("tile_x") == x) & (F.col("tile_y") == y)
+        reads = []
+        for i, n in enumerate(names):
+            df = params[n]
+            band = F.col("band") if "band" in df.columns else F.lit(None).cast("int")
+            reads.append(df.filter((F.col("zoom") == z) & (near if pads[n] else here)).select(
+                F.lit(i).alias("var"), "tile_x", "tile_y", band.alias("band"),
+                "width", "height", "cells"))
+        rows = reduce(DataFrame.union, reads).collect()
+        got = [{} for _ in names]  # per var: (tile_x, tile_y, band) -> row, lowest band first
+        for r in sorted(rows, key=lambda r: -1 if r.band is None else r.band):
+            got[r.var].setdefault((r.tile_x, r.tile_y, r.band if banded else None), r)
+        k = next((k for k in got[0] if k[:2] == (x, y) and all(k in g for g in got[1:])), None)
+        if k is None:
+            return None
+        row = got[0][k]
+        if kernel is None:
+            return row, row.cells
+        tile = [np.array([v], dtype=np.int64) for v in (z, x, y, row.width, row.height)]
+        lists = []
+        for i, n in enumerate(names):
+            lists.append(_objects([_cells(got[i][k])]))
+            if pads[n]:
+                near_tiles = {(dx, dy): _grid(got[i].get((x + dx, y + dy, k[2])))
+                              for dx, dy in STRIP_OFFSETS}
+                lists += [_objects([strip]) for strip in halo_strips(near_tiles, pads[n])]
+        return row, run_tiles(kernel, names, pads, tile, lists)[0]
 
     # -- E1/E3: WMS GetMap / WCS GetCoverage --------------------------------
     def get_extent(self, layer_name: str, extent: tuple, cell_size: float) -> DataFrame:
@@ -350,8 +443,9 @@ class Engine:
         The points enter as a pandas frame, which plans as a local
         relation (``LocalTableScan``) — never as a Python RDD. A Python
         RDD would be re-read through Python workers to build the
-        broadcast side, one job and 130-250 ms of worker start-up per
-        request; the local relation needs neither."""
+        broadcast side: one more job and Python task, ~0.2 s per request
+        on a 4-core host even with zip-free workers; the local relation
+        needs neither."""
         import pandas as pd
 
         from .operators.tiling import pixel_index_sql

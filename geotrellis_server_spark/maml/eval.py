@@ -44,28 +44,8 @@ def eval_expr(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
     so only ``def``/``undef`` of it can tell: ``fmean(mask(def(d),
     geom))`` counts such a cell as 0 where a NaN-padded mask tile would
     skip it."""
-    expr = fold_constants(expr)
-    names = sorted(expr.var_names())
-    if not names:
-        # constant expression (e.g. fully folded scalar): there is no tile
-        # grid to broadcast it over — reference MAML likewise needs at
-        # least one bound raster (Vars) to define the output grid.
-        raise ValueError(
-            "MAML expression has no raster vars after constant folding; "
-            "bind at least one raster var to define the output tile grid"
-        )
-    missing = [n for n in names if n not in params]
-    if missing:
-        raise KeyError(f"unbound MAML vars: {missing}")
-    pads = expr.vars_with_buffer()
-    kernel = compile_node(expr)
-
-    # band participates in the alignment key when every input is
-    # multiband-aware (TILE_SCHEMA) — otherwise band 0 of one var would
-    # join band 1 of another (many-to-many duplication)
-    key = list(KEY)
-    if all("band" in params[n].columns for n in names):
-        key = KEY + ["band"]
+    names, pads, kernel = compile_expr(expr, params)
+    key = align_key(params[n] for n in names)
 
     reads, cols = [], []
     for n in names:
@@ -98,6 +78,33 @@ def eval_expr(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
         *key, "width", "height",
         tile_kernel(*KEY, "width", "height", *cols).alias("cells"),
     )
+
+
+def compile_expr(expr: Expr, params) -> tuple[list[str], dict[str, int], object]:
+    """Fold and compile ``expr`` against the vars bound in ``params``:
+    its sorted var names, each var's halo buffer and the kernel closure.
+    Shared by ``eval_expr`` and the engine's request path."""
+    expr = fold_constants(expr)
+    names = sorted(expr.var_names())
+    if not names:
+        # constant expression (e.g. fully folded scalar): there is no tile
+        # grid to broadcast it over — reference MAML likewise needs at
+        # least one bound raster (Vars) to define the output grid.
+        raise ValueError(
+            "MAML expression has no raster vars after constant folding; "
+            "bind at least one raster var to define the output tile grid"
+        )
+    missing = [n for n in names if n not in params]
+    if missing:
+        raise KeyError(f"unbound MAML vars: {missing}")
+    return names, expr.vars_with_buffer(), compile_node(expr)
+
+
+def align_key(tiles) -> list[str]:
+    """The key the vars' tile DataFrames align on: ``band`` joins it when
+    every input is multiband-aware (TILE_SCHEMA) — otherwise band 0 of
+    one var would join band 1 of another (many-to-many duplication)."""
+    return KEY + ["band"] if all("band" in t.columns for t in tiles) else list(KEY)
 
 
 def run_tiles(kernel, names, pads, tiles, lists) -> np.ndarray:

@@ -62,6 +62,24 @@ def _strip_sql(r: int) -> str:
 
 
 STRIP_COLS = ("s_nw", "s_n", "s_ne", "s_w", "s_e", "s_sw", "s_s", "s_se")
+# the (dx, dy) of the neighbour each strip column comes from (y grows south)
+STRIP_OFFSETS = ((-1, -1), (0, -1), (1, -1), (-1, 0), (1, 0), (-1, 1), (0, 1), (1, 1))
+
+
+def halo_strips(neighbours: dict, radius: int) -> list:
+    """The eight strips ``with_halo`` pivots for one tile, sliced in numpy
+    for a request's few tiles: ``neighbours`` maps a ``STRIP_OFFSETS``
+    offset to that neighbour's (h, w) cell array, or None for NULL cells.
+    Returns the flattened row-major strips in ``STRIP_COLS`` order, None
+    for an absent neighbour."""
+    r, out = int(radius), []
+    for dx, dy in STRIP_OFFSETS:
+        a = neighbours.get((dx, dy))
+        if a is not None:
+            a = a[-r:] if dy < 0 else a[:r] if dy > 0 else a
+            a = (a[:, -r:] if dx < 0 else a[:, :r] if dx > 0 else a).ravel()
+        out.append(a)
+    return out
 
 
 def with_halo(tiles: DataFrame, radius: int) -> DataFrame:

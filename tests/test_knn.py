@@ -85,27 +85,18 @@ def test_knn_bulk_k_exceeds_population(spark):
     assert len(res) == 60
 
 
-def test_knn_bulk_plan_broadcasts_queries(spark):
-    # the docs side must never shuffle for the candidate join: query
-    # disk-cells broadcast, docs flow map-side through BroadcastHashJoin
-    import io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from geotrellis_server_spark.grids import cells as C
-
-    d = synth.extract_geometry(synth.docs(spark, 500))
-    docs_c = d.withColumn("_cell", C.cell_key_col("lon", "lat", 4))
-    q = _qdf(spark, [(0, 1.0, 1.0)]).selectExpr(
-        "query_id", "qlon", "qlat",
-        "CAST(floor((qlon + 180.0) / 360.0 * 16) AS BIGINT) AS _qcx",
-        "CAST(8 AS BIGINT) AS _qcy",
-    ).withColumn("_cell", F.expr("_qcx * 16 + _qcy"))
-    joined = docs_c.join(F.broadcast(q), "_cell", "inner")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+def test_knn_bulk_plan_broadcasts_queries(spark, monkeypatch):
+    # the docs side must never shuffle for the candidate join: in every
+    # ring the pending queries' disk cells broadcast and the docs flow
+    # map-side through a BroadcastHashJoin
+    d = synth.extract_geometry(synth.docs(spark, 400))
+    rings = _count_rings(monkeypatch, d)
+    knn.knn_join_bulk(d, _qdf(spark, [(0, 0.0, 0.0)]), k=50, res=6)
+    assert len(rings) >= 2, "the case must run more than one ring"
+    for topk in rings:
+        plan = topk._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, plan
+        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
 
 
 def test_auto_res_density_rule():

@@ -342,7 +342,7 @@ def event_logs(draw):
     return rows, zoom, draw(st.sampled_from([4, 64])), draw(st.integers(1, 5))
 
 
-@settings(max_examples=6, deadline=None,
+@settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(log=event_logs())
 def test_rasterize_hops_property_equals_sql_reference(spark, arrow_batch, log):

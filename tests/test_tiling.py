@@ -277,7 +277,7 @@ def tile_layers(draw):
     return rows, zoom_t, fill, draw(st.integers(1, 5))
 
 
-@settings(max_examples=4, deadline=None,
+@settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
 @given(layer=tile_layers())
 def test_pyramid_up_property_equals_sql_reference(spark, arrow_batch, layer):
