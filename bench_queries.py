@@ -1,0 +1,488 @@
+"""The bench queries, each defined once.
+
+``QUERIES`` maps a query name to ``prepare(inputs)``: it builds, untimed,
+whatever shared input the query reads and returns a zero-arg function
+that builds the query's DataFrame. ``bench.py`` times
+``fn().write.format("noop").save()``; to see one plan, run
+``QUERIES[name](inputs)().explain("formatted")``.
+
+``Inputs`` prepares each shared input lazily and once, so a run that
+skips a query builds none of its inputs. The docs table is materialized
+to parquet once per (sf, N) and read back, so measured time is engine
+work (scan → extract → join → key → agg), not synthesis.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+from functools import cached_property
+
+from pyspark.sql import functions as F
+
+from geotrellis_server_spark import sqlgen
+from geotrellis_server_spark.maml import ast as M
+from geotrellis_server_spark.maml.eval import eval_expr
+from geotrellis_server_spark.operators import (dedup, density, knn, ml, similarity,
+                                               sketch, spatial_join, text, tiling)
+from geotrellis_server_spark.operators.trajectory import rasterize_hops
+from geotrellis_server_spark.sources import bucketed, synth
+from geotrellis_server_spark.sources.zorder import write_zordered
+
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache")
+
+
+def sf_of(sf_dir: str) -> float:
+    try:
+        return float(sf_dir.rstrip("/").split("sf")[-1])
+    except ValueError:
+        return -1.0
+
+
+def materialize_docs(spark, sf_dir: str, n: int) -> str:
+    """Write the synthetic docs table once; subsequent runs read parquet."""
+    path = os.path.join(CACHE_DIR, f"docs_{sf_of(sf_dir)}_{n}_zstd.parquet")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        # 8 splits per core at the widest configuration → several task
+        # waves, so stragglers from external host load amortize. zstd:
+        # measured ~2x faster scans than snappy here (smaller footprint
+        # beats cheaper decompression under memory-bandwidth pressure) —
+        # and it is the standard codec for 100-TB lakes.
+        synth.docs(spark, n, partitions=CPUS * 8).write.mode("overwrite").option(
+            "compression", "zstd"
+        ).parquet(path)
+    return path
+
+
+def materialize_embeddings(spark, sf_dir: str, n: int, dim: int) -> str:
+    """Deterministic synthetic embeddings (hash-fraction coordinates in
+    [-1, 1)) written once; subsequent runs read parquet."""
+    path = os.path.join(CACHE_DIR, f"emb_{sf_of(sf_dir)}_{n}x{dim}.parquet")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        (spark.range(n, numPartitions=CPUS * 4)
+         .select(F.col("id").alias("vec_id"),
+                 F.expr(f"transform(sequence(0, {dim - 1}), j -> "
+                        f"CAST((pmod(xxhash64(id * {dim} + j), 100000)"
+                        f" / 50000.0) - 1.0 AS FLOAT))").alias("embedding"))
+         .write.mode("overwrite").option("compression", "zstd")
+         .parquet(path))
+    return path
+
+
+def _ensure_bucketed_table(spark, tbl: str, marker: dict, bucket_cols,
+                           n_buckets: int, build) -> None:
+    """Reuse a bucketed warehouse table ACROSS sessions. The parquet
+    files under the session's warehouse survive; only the in-memory
+    catalog's metadata dies with the JVM — so when the on-disk marker
+    matches the wanted layout, re-register the bucket spec with CREATE
+    TABLE ... LOCATION instead of re-running the ~40 s ingest (that prep
+    burned driver wall-clock every session and pushed the timed queries
+    into the tenant-burst window)."""
+    if spark.catalog.tableExists(tbl):
+        return
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    wh = os.path.join(warehouse, tbl)
+    mpath = os.path.join(wh, "_BENCH_MARKER.json")  # _-prefixed: invisible
+    try:                                            # to Spark's file index
+        with open(mpath) as f:
+            have = json.load(f)
+    except (OSError, ValueError):
+        have = None
+    if have == marker and os.path.exists(os.path.join(wh, "_SUCCESS")):
+        schema = spark.read.parquet(f"file:{wh}").schema
+        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+                         for f in schema.fields)
+        bc = ", ".join(bucket_cols)
+        spark.sql(
+            f"CREATE TABLE {tbl} ({cols}) USING parquet "
+            f"CLUSTERED BY ({bc}) SORTED BY ({bc}) "
+            f"INTO {n_buckets} BUCKETS LOCATION 'file:{wh}'"
+        )
+        return
+    shutil.rmtree(wh, ignore_errors=True)
+    build()
+    with open(mpath, "w") as f:
+        json.dump(marker, f)
+
+
+class Inputs:
+    """The shared inputs of one bench session at (sf_dir, mult × the
+    documents rows, cores), each built on first use."""
+
+    def __init__(self, spark, sf_dir: str, mult: int, cores: int):
+        self.spark, self.sf_dir, self.mult, self.cores = spark, sf_dir, mult, cores
+        self._cached = {}  # name -> cached DataFrame
+        self._read = set()  # cached inputs read since the last release_unread()
+
+    @cached_property
+    def n(self) -> int:
+        """Docs in the bench corpus: ``mult`` per documents row."""
+        return self.documents.count() * self.mult
+
+    @cached_property
+    def docs_path(self) -> str:
+        path = materialize_docs(self.spark, self.sf_dir, self.n)
+        # page-cache the input once so scan I/O doesn't dominate run 1
+        self.spark.read.parquet(path).write.mode("overwrite").format("noop").save()
+        return path
+
+    def load(self):
+        return synth.extract_geometry(self.spark.read.parquet(self.docs_path))
+
+    def load_text(self):
+        """The docs' text spans joined per doc."""
+        return self.spark.read.parquet(self.docs_path).select(
+            "doc_id",
+            F.expr("array_join(transform(filter(spans, s -> s.kind = "
+                   "'text'), s -> s.text), ' ')").alias("text"))
+
+    @cached_property
+    def documents(self):
+        return self.spark.read.parquet(f"{self.sf_dir}/documents.parquet")
+
+    @cached_property
+    def embeddings(self):
+        return self.spark.read.parquet(f"{self.sf_dir}/embeddings.parquet")
+
+    @cached_property
+    def zones(self):
+        return synth.zone_grid(self.spark)
+
+    def _cache(self, name: str, build):
+        """A cached input, materialized on first use."""
+        self._read.add(name)
+        if name not in self._cached:
+            df = build().cache()
+            df.count()
+            self._cached[name] = df
+        return self._cached[name]
+
+    def release_unread(self) -> None:
+        """Unpersist every cached input not read since the last call.
+        Queries that share a cached input are adjacent in ``QUERIES``,
+        so calling this after each prepare releases an input once the
+        last query that reads it has run. It blocks, so the release
+        does not overlap the next timed query."""
+        for name in set(self._cached) - self._read:
+            self._cached.pop(name).unpersist(blocking=True)
+        self._read = set()
+
+    @property
+    def zone_cells(self):
+        # one-time broadcast grid build (fixed per-job cost, untimed — a
+        # real deployment builds it once and amortizes over 10^12 docs)
+        return self._cache("zone_cells", lambda: spatial_join.build_rect_zone_cells(self.zones))
+
+    @property
+    def tiles_z6(self):
+        # partitioned BY THE HALO KEY before caching — the strips-only
+        # halo exchange (operators/focal.py) then reuses this partitioning
+        # for its join-back and only edge strips shuffle (a pyramid table
+        # stored partitioned by tile key gives the same reuse for free)
+        # cores*1, not cores*4: the z6 pyramid is 4,096 tiles, and at
+        # 128 partitions every downstream stage paid ~32 tiles' work per
+        # 128 task launches — scheduling-bound (measured: q9 2.77 → 1.69
+        # s just from this). Partition count should track DATA volume
+        # (tiles/partition), not a fixed core multiple; at 100 TB the
+        # same ~128 tiles/partition rule gives thousands of partitions.
+        return self._cache("tiles_z6", lambda: tiling.rasterize_count(self.load(), 6, tile_size=64)
+                           .repartition(self.cores, "zoom", "tile_x", "tile_y"))
+
+    @cached_property
+    def pq_books(self):
+        return similarity.pq_train(self.embeddings, n_subspaces=8, n_codes=16, seed=11)
+
+    @property
+    def pq_enc(self):
+        return self._cache("pq_enc", lambda: similarity.pq_encode(self.embeddings, self.pq_books)
+                           .select("vec_id", "pq_code"))
+
+    @cached_property
+    def embeddings_large(self):
+        """Synthetic 64-dim embeddings, one per 4 docs: 1M rows at the
+        ledger's reference config (sf0.1 × 800)."""
+        return self.spark.read.parquet(
+            materialize_embeddings(self.spark, self.sf_dir, self.n // 4, 64))
+
+    @cached_property
+    def keyed_z12(self) -> str:
+        """The docs keyed at z12, stored bucketed by (zone, tile)."""
+        tbl = "bench_keyed_z12"
+        _ensure_bucketed_table(
+            self.spark, tbl,
+            {"sf": sf_of(self.sf_dir), "n": self.n, "zoom": 12, "buckets": self.cores},
+            ("zone_id", "tile_x", "tile_y"), self.cores,
+            lambda: bucketed.materialize_keyed_table(self.spark, self.load(), tbl, zoom=12,
+                                                     n_buckets=self.cores),
+        )
+        return tbl
+
+    @cached_property
+    def pyramid_z6(self) -> str:
+        """``tiles_z6`` stored bucketed by the halo key."""
+        tbl = "bench_pyr_z6"
+        _ensure_bucketed_table(
+            self.spark, tbl,
+            {"sf": sf_of(self.sf_dir), "n": self.n, "zoom": 6, "buckets": self.cores},
+            ("zoom", "tile_x", "tile_y"), self.cores,
+            lambda: bucketed.materialize_tile_pyramid(self.tiles_z6, tbl,
+                                                      n_buckets=self.cores),
+        )
+        return tbl
+
+    @cached_property
+    def zordered_z8(self) -> str:
+        """The docs' z8 keys and points, Z-ordered on (tile_x, tile_y)."""
+        zdir = os.path.join(CACHE_DIR, f"zorder_{sf_of(self.sf_dir)}_{self.n}.parquet")
+        if not os.path.exists(os.path.join(zdir, "_SUCCESS")):
+            write_zordered(
+                tiling.assign_tiles(self.load(), 8)
+                .select("doc_id", "tile_x", "tile_y", "lon", "lat"),
+                zdir, n_files=64, compression="zstd")
+        return zdir
+
+    @cached_property
+    def events(self):
+        """The events replicated ``mult // 20`` times (≥ 1) with distinct
+        synthetic users, so window state stays per-user."""
+        ev_mult = max(self.mult // 20, 1)  # ~38M line cells at the default sf
+        ev = self.spark.read.parquet(f"{self.sf_dir}/events.parquet")
+        reps = self.spark.range(ev_mult).select(F.col("id").alias("rep"))
+        eid = f"(event_id * {ev_mult} + rep)"
+        return ev.crossJoin(reps).select(
+            F.expr(eid).alias("event_id"),
+            (F.col("user_id") * ev_mult + F.col("rep")).alias("user_id"),
+            "ts",
+            F.expr(sqlgen.lon_sql(eid)).alias("lon"),
+            F.expr(sqlgen.lat_sql(eid)).alias("lat"),
+        )
+
+
+def q1(inp: Inputs):
+    # flagship: scan → extract → broadcast PIP join → z12 tile key →
+    # per-(zone, tile) agg. The BASELINE.json headline job.
+    zones, zone_cells = inp.zones, inp.zone_cells
+    return lambda: (
+        tiling.assign_tiles(spatial_join.pip_join_rect(inp.load(), zones, zone_cells=zone_cells), 12)
+        .groupBy("zone_id", "tile_x", "tile_y")
+        .agg(F.count("*").alias("n_docs")))
+
+
+def q19(inp: Inputs):
+    # the same flagship aggregation served from the BUCKETED pre-keyed
+    # layout (sources/bucketed.py): extraction + join + keying were paid
+    # once at ingest, the bucketing is recognized by the planner, and the
+    # agg runs with ZERO Exchange — the amortized steady-state cost of
+    # the headline query on a 100-TB lake
+    tbl = inp.keyed_z12
+    return lambda: bucketed.tile_counts_from_keyed(inp.spark, tbl)
+
+
+def q24(inp: Inputs):
+    # bbox analytics over the Z-ORDERED at-rest layout (sources/zorder.py):
+    # parquet min/max stats on (tile_x, tile_y) prune files/row-groups on
+    # BOTH axes, so the 1/16-area bbox scans a corresponding fraction of
+    # the lake — the steady-state cost of spatial slicing on a 100-TB
+    # table (cf. q19 for the agg exchange)
+    zdir = inp.zordered_z8
+    return lambda: (
+        inp.spark.read.parquet(zdir)
+        .where("tile_x < 64 AND tile_y < 64")
+        .groupBy("tile_x", "tile_y")
+        .agg(F.count("*").alias("n_docs")))
+
+
+def q25(inp: Inputs):
+    # kernel density at z8 (operators/density.py): the classic heat-map
+    # surface — a row-local 9-way stamp explode collapsed by ONE
+    # map-side-combined pixel aggregate (9n rows in, never 9n out of the
+    # exchange; hot clusters pre-combine)
+    return lambda: density.kernel_density(inp.load(), 8, 64)
+
+
+def q26(inp: Inputs):
+    # trajectory linestring rasterization (rounded DDA,
+    # operators/trajectory.py): one user-keyed window exchange + a
+    # row-local per-hop explode (~96 cells/hop on the 256-px grid) + one
+    # map-side-combined pixel aggregate
+    ev = inp.events
+    return lambda: rasterize_hops(ev, zoom=2, tile_size=64)
+
+
+def q3(inp: Inputs):
+    cell = sqlgen.cell_key_sql("lon", "lat", 6)
+    return lambda: inp.load().selectExpr(f"{cell} AS cell").groupBy("cell").agg(F.count("*").alias("n"))
+
+
+def q5(inp: Inputs):
+    return lambda: knn.knn_join(
+        inp.load(), [(0, -74.0, 40.5), (1, 10.0, 10.0), (2, 179.0, -80.0)], k=10)
+
+
+def q6(inp: Inputs):
+    # single 8-row band: candidates must agree on the full signature. The
+    # synthetic corpus has a ~40-word vocabulary, so looser bands are
+    # correct but quadratic (2.3M true pairs at j>=0.8 among 5000 docs —
+    # measured); the bench config keeps output near-linear.
+    documents = inp.documents
+    return lambda: dedup.minhash_dedup_pairs(documents, k=8, bands=1, rows_per_band=8,
+                                             threshold=0.9)
+
+
+def q7(inp: Inputs):
+    emb = inp.embeddings
+    return lambda: similarity.cosine_topk(
+        emb, [float(v) for v in emb.filter("vec_id = 0").first().embedding], 100)
+
+
+def q15(inp: Inputs):
+    # PQ ADC top-k over a pre-encoded corpus (the IVF-PQ read path: codes
+    # scanned, lookup-table scoring in codegen, TakeOrderedAndProject)
+    enc, books = inp.pq_enc, inp.pq_books
+    query = [float(v) for v in inp.embeddings.filter("vec_id = 0").first().embedding]
+    return lambda: similarity.pq_topk(enc, books, query, 100)
+
+
+def q16(inp: Inputs):
+    # benchmark decontamination: corpus n-grams vs broadcast eval set
+    eval_docs = inp.documents.where("doc_id % 100 = 0")
+    train_docs = inp.documents.where("doc_id % 100 != 0")
+    return lambda: dedup.decontaminate(train_docs, eval_docs, n=5, min_hits=2)
+
+
+def q17(inp: Inputs):
+    # KMV distinct sketch per source (collect_set partial agg)
+    documents = inp.documents
+    return lambda: sketch.kmv_estimate(
+        documents.select("source", F.explode(F.split("text", " ")).alias("w")),
+        "w", k=64, group_by=["source"])
+
+
+def q21(inp: Inputs):
+    # the CCNet bigram-LM scorer over the full docs corpus
+    return lambda: text.ngram_lm_logprob(
+        inp.load_text(), inp.load_text().where("hash(doc_id) % 5 != 0"))
+
+
+def q22(inp: Inputs):
+    # exact-integer k-means over synthetic 64-dim embeddings
+    # (operators/ml.py: one pass per round, Arrow-batched exact-float64
+    # BLAS distances, k*dim-row partial-sum exchanges)
+    emb = inp.embeddings_large
+    return lambda: ml.kmeans(emb, k=16, n_iter=2)
+
+
+def q23(inp: Inputs):
+    # Naive Bayes train+classify over the full docs corpus (broadcast
+    # vocab-sized model onto the row-local token stream); bench corpus
+    # doc_ids are strings: hash-split train/test
+    nb_docs = inp.load_text().withColumn(
+        "lang", F.expr("CAST(pmod(xxhash64(doc_id), 5) AS STRING)"))
+    return lambda: ml.nb_classify(nb_docs.where("pmod(xxhash64(doc_id, 7), 2) = 0"),
+                                  nb_docs, label_col="lang")
+
+
+def q13(inp: Inputs):
+    documents = inp.documents
+
+    def curation():
+        stats = text.text_stats(documents).select("doc_id", "quality_score", "n_tokens")
+        lang = text.lang_id(documents).select("doc_id", "lang_pred")
+        surv = dedup.exact_dedup(documents).select(F.col("survivor_id").alias("doc_id"))
+        splits = text.split_assign(documents)
+        return (documents.select("doc_id").join(surv, "doc_id").join(stats, "doc_id")
+                .filter("quality_score >= 0.3").join(lang, "doc_id").join(splits, "doc_id")
+                .groupBy("split", "lang_pred")
+                .agg(F.count("*").alias("n_docs"), F.sum("n_tokens").alias("total_tokens")))
+
+    return curation
+
+
+def q14(inp: Inputs):
+    # pyramid rollup z6→z5 (Pyramid.up analog: mapInArrow numpy 2×2
+    # downsample + quadrant assembly, one shuffle on the parent key).
+    # Runs FIRST in the z6 block: measured 5.6-6.5 s when it follows
+    # q9/q11 late in a full suite vs 0.9-1.2 s fresh or isolated — an
+    # accumulated-session artifact (shuffle files/GC pressure), not the
+    # operator (isolated probes and this ordering both measure ~1 s).
+    tiles = inp.tiles_z6
+    return lambda: tiling.pyramid_up(tiles, agg="sum")
+
+
+def q9(inp: Inputs):
+    # focal map algebra over a rasterized pyramid level: halo join +
+    # fused numpy kernel (the reference's FocalMean neighborhood read)
+    tiles = inp.tiles_z6
+    return lambda: eval_expr(M.focal("fmean", M.var("d"), radius=1), {"d": tiles})
+
+
+def q11(inp: Inputs):
+    # mask-by-geometry over the same pyramid level (rasterized polygon
+    # mask + fused mask kernel)
+    tiles = inp.tiles_z6
+    ring = [(-60.3, -20.7), (45.9, -33.1), (70.4, 38.6), (-85.2, 55.9)]
+    return lambda: eval_expr(M.mask(M.var("d"), M.geom(ring)), {"d": tiles})
+
+
+def q18(inp: Inputs):
+    # focal fmean served from COLD bucketed storage (no cache): the
+    # pyramid table is bucketed by the halo key, so the join-back's body
+    # side is the file scan itself (plan-asserted in test_bucketed.py) —
+    # the 100-TB serving shape, where the pyramid lives in object
+    # storage, not executor memory
+    tbl = inp.pyramid_z6
+    return lambda: eval_expr(M.focal("fmean", M.var("d"), radius=1),
+                             {"d": inp.spark.table(tbl)})
+
+
+def q10(inp: Inputs):
+    # join-based bulk kNN: 1,000 query points, exact top-10 each (no
+    # driver loop — docs join broadcast query cells)
+    bulk_q = inp.spark.range(1000).selectExpr(
+        "id AS query_id",
+        "CAST((id * 7349) % 368640 AS DOUBLE) / 1024.0 - 180.0 AS qlon",
+        "CAST((id * 4391) % 174080 AS DOUBLE) / 1024.0 - 85.0 AS qlat",
+    )
+    # density-proportional resolution (knn.auto_res: ring-1 disk ≈ 2k
+    # candidate docs/query). At 4M docs that is res 7 — measured res
+    # 6/7/8 = 10.3/5.5/9.1 s: coarser floods the per-query window, finer
+    # re-rings extra rounds. The rule scales with the corpus, not a
+    # constant (res 4's 140M candidate rows was r1's 19 s scale-killer).
+    res = knn.auto_res(inp.n)
+    return lambda: knn.knn_join_bulk(inp.load(), bulk_q, k=10, res=res)
+
+
+# bench.py's run order. Queries that share a cached input stay adjacent
+# (see Inputs.release_unread), and q14 leads the z6 block.
+QUERIES = {
+    "q1_pip_tile_pipeline": q1,
+    "q19_flagship_bucketed": q19,
+    "q24_bbox_zordered": q24,
+    "q25_kernel_density": q25,
+    "q26_hops_rasterize": q26,
+    "q2_tile_counts_z8": lambda inp: lambda: tiling.tile_counts(inp.load(), 8),
+    "q3_cell_encode_r6": q3,
+    "q4_rasterize_z4": lambda inp: lambda: tiling.rasterize_count(inp.load(), 4, tile_size=64),
+    "q5_knn_k10": q5,
+    "q6_dedup_minhash_lsh": q6,
+    "q7_cosine_topk100": q7,
+    "q15_pq_adc_topk100": q15,
+    "q16_decontaminate": q16,
+    "q17_kmv_distinct": q17,
+    # ExactSubstr-style span dedup over the full docs corpus
+    "q20_span_dedup": lambda inp: lambda: text.repeated_span_dedup(inp.load_text(), k=5),
+    "q21_lm_logprob": q21,
+    "q22_kmeans_1m": q22,
+    "q23_nb_classify": q23,
+    "q8_text_stats": lambda inp: lambda: text.text_stats(inp.documents),
+    "q12_chunk_windows": lambda inp: lambda: text.chunk_documents(inp.documents, size=50,
+                                                                  overlap=10),
+    "q13_pretrain_curation": q13,
+    "q14_pyramid_up_z6to5": q14,
+    "q9_focal_fmean_z6": q9,
+    "q11_mask_polygon_z6": q11,
+    "q18_focal_cold_bucketed": q18,
+    "q10_knn_bulk_1k": q10,
+}

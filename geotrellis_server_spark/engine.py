@@ -12,6 +12,7 @@ style/render.
 from __future__ import annotations
 
 import itertools
+import weakref
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -33,6 +34,9 @@ SCHEME = ZoomedLayoutScheme()
 
 
 _LAYER_GEN = itertools.count()
+# tiles DataFrame -> Layer.meta(); DataFrames hash by identity, and an
+# entry lives as long as its DataFrame
+_TILES_META: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 @dataclass
@@ -56,19 +60,18 @@ class Layer:
     # id(), which CPython reuses after GC) — cache keys hang off this;
     # init=False so even dataclasses.replace() mints a fresh one
     generation: int = field(init=False, default_factory=lambda: next(_LAYER_GEN))
-    _meta: dict = field(default_factory=dict, repr=False)  # lazy metadata cache
 
     def meta(self) -> tuple[int, list[int]]:
-        """(tile_px, sorted zooms) — ONE aggregate per layer lifetime
-        (VERDICT r1 minor 5: get_extent/describe used to issue two small
-        collects on every request). Invalidate by constructing a new
-        Layer when the tiles table changes."""
-        if "m" not in self._meta:
+        """(tile_px, sorted zooms) — ONE aggregate per tiles DataFrame:
+        get_extent/describe/GetFeatureInfo read it on every request, and
+        a Layer rebuilt over the same tiles (``Engine.set_layer`` with a
+        new style) reuses it."""
+        if self.tiles not in _TILES_META:
             rows = self.tiles.groupBy("zoom").agg(F.first("width").alias("w")).collect()
             zooms = sorted(int(r.zoom) for r in rows)
             tile_px = int(rows[0].w) if rows else SCHEME.tile_size
-            self._meta["m"] = (tile_px, zooms)
-        return self._meta["m"]
+            _TILES_META[self.tiles] = (tile_px, zooms)
+        return _TILES_META[self.tiles]
 
     def vars(self) -> dict[str, DataFrame]:
         """The raster vars a MAML expression binds: ``sources``, plus the

@@ -7,6 +7,8 @@ math. A regression in any of these silently costs 10-100x at 100 TB."""
 import pyspark.sql.functions as F
 import pytest
 
+import bench_queries
+from bench_queries import QUERIES
 from geotrellis_server_spark.operators import spatial_join, tiling
 from geotrellis_server_spark.sources import synth
 
@@ -15,6 +17,28 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def bench_inputs(spark, tmp_path_factory):
+    """The bench queries' inputs at sf0.001 × 2 docs per documents row,
+    cached under a temporary directory."""
+    mp = pytest.MonkeyPatch()
+    mp.setattr(bench_queries, "CACHE_DIR", str(tmp_path_factory.mktemp("bench_cache")))
+    mp.setattr(bench_queries, "CPUS", 1)  # 8 docs files, 4 embeddings files
+    inputs = bench_queries.Inputs(spark, SF, 2, 4)
+    yield inputs
+    inputs.release_unread()
+    inputs.release_unread()  # reads nothing since the last call: releases all
+    for tbl in ("bench_keyed_z12", "bench_pyr_z6"):
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    mp.undo()
+
+
+def _bench_query(inputs, name):
+    df = QUERIES[name](inputs)()
+    inputs.release_unread()
+    return df
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark):
@@ -33,20 +57,14 @@ def test_column_pruning_in_read_schema(spark):
     assert "user_id" not in read_schema and "lon" not in read_schema
 
 
-def test_flagship_broadcasts_and_never_sort_merges(spark):
-    d = synth.extract_geometry(synth.docs(spark, 1000))
-    joined = spatial_join.pip_join_rect(d, synth.zone_grid(spark))
-    out = tiling.assign_tiles(joined, 8).groupBy("zone_id", "tile_x", "tile_y").agg(
-        F.count("*").alias("n")
-    )
-    plan = _plan(out)
+def test_flagship_broadcasts_and_never_sort_merges(bench_inputs):
+    plan = _plan(_bench_query(bench_inputs, "q1_pip_tile_pipeline"))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
-def test_tile_math_in_wholestage_codegen(spark):
-    d = synth.extract_geometry(synth.docs(spark, 1000))
-    df = tiling.tile_counts(d, 8)
+def test_tile_math_in_wholestage_codegen(bench_inputs):
+    df = _bench_query(bench_inputs, "q2_tile_counts_z8")
     df.collect()  # AQE: codegen stages appear in the FINAL plan only
     plan = _plan(df)
     # '*(n)' prefixes = whole-stage-codegen stage ids in the final plan
@@ -303,3 +321,68 @@ def test_knn_rings_read_pending_from_local_relation(spark, monkeypatch):
 def test_tile_counts_parses_geometry_once(spark, docs_parquet):
     d = synth.extract_geometry(spark.read.parquet(docs_parquet))
     assert len(_parse_ops(_plan(tiling.tile_counts(d, 8)))) == 1
+
+
+# ---------------------------------------------------------------------------
+# Every bench query's plan shape, by name: (Python nodes, shuffle
+# Exchanges, BroadcastExchanges) in the physical plan AQE starts from.
+# q5/q10 run their kNN rings while the DataFrame is built and return a
+# checkpointed result, so their plans hold nothing. A changed count is a
+# plan change to explain, not a number to copy.
+# ---------------------------------------------------------------------------
+
+PLAN_PINS = {
+    "q1_pip_tile_pipeline": (0, 1, 1),
+    "q19_flagship_bucketed": (0, 0, 0),
+    "q24_bbox_zordered": (0, 1, 0),
+    "q25_kernel_density": (0, 1, 0),
+    "q26_hops_rasterize": (1, 2, 1),
+    "q2_tile_counts_z8": (0, 1, 0),
+    "q3_cell_encode_r6": (0, 1, 0),
+    "q4_rasterize_z4": (1, 2, 0),
+    "q5_knn_k10": (0, 0, 0),
+    "q6_dedup_minhash_lsh": (0, 5, 3),
+    "q7_cosine_topk100": (0, 0, 0),
+    "q15_pq_adc_topk100": (0, 0, 0),
+    "q16_decontaminate": (0, 4, 1),
+    "q17_kmv_distinct": (0, 2, 0),
+    "q20_span_dedup": (0, 2, 2),
+    "q21_lm_logprob": (0, 4, 3),
+    "q22_kmeans_1m": (1, 0, 0),
+    "q23_nb_classify": (0, 1, 1),
+    "q8_text_stats": (0, 0, 0),
+    "q12_chunk_windows": (0, 0, 0),
+    "q13_pretrain_curation": (0, 2, 4),
+    "q14_pyramid_up_z6to5": (2, 1, 0),
+    "q9_focal_fmean_z6": (1, 1, 1),
+    "q11_mask_polygon_z6": (1, 0, 0),
+    "q18_focal_cold_bucketed": (1, 1, 1),
+    "q10_knn_bulk_1k": (0, 0, 0),
+}
+
+
+def _initial_plan_counts(df) -> tuple[int, int, int]:
+    """(Python nodes, shuffle Exchanges, BroadcastExchanges) in the
+    initial (pre-AQE) physical plan; a cached input counts as its scan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    counts = [0, 0, 0]
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        counts[0] += node.getClass().getName().startswith("org.apache.spark.sql.execution.python.")
+        counts[1] += node.nodeName() == "Exchange"
+        counts[2] += node.nodeName() == "BroadcastExchange"
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return tuple(counts)
+
+
+def test_every_bench_query_has_a_plan_pin():
+    assert list(PLAN_PINS) == list(QUERIES)
+
+
+@pytest.mark.parametrize("name", list(QUERIES))
+def test_bench_query_plan_pin(bench_inputs, name):
+    assert _initial_plan_counts(_bench_query(bench_inputs, name)) == PLAN_PINS[name], name

@@ -109,6 +109,17 @@ def _python_nodes(plan: str) -> list:
                         "MapInPandas", "PythonMapInArrow", "ExistingRDD") if n in plan]
 
 
+def _jobs(spark, group, call) -> int:
+    """The number of Spark jobs ``call()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("name", ["styled", "fmean2", "masked", "multi"])
 def test_one_jvm_job_per_tile_request(engine, spark, monkeypatch, name):
     """A tile request runs one Spark job, and what it collects plans no
@@ -122,15 +133,27 @@ def test_one_jvm_job_per_tile_request(engine, spark, monkeypatch, name):
 
     monkeypatch.setattr(cls, "collect", recording_collect)
     engine.request_cache.invalidate()
-    sc = spark.sparkContext
-    group = f"request-{name}"
-    sc.setJobGroup(group, group)
-    try:
-        assert engine.get_tile_png(name, Z, 1, 2) is not None
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, group
+    pngs = []
+    assert _jobs(spark, f"request-{name}", lambda: pngs.append(engine.get_tile_png(name, Z, 1, 2))) == 1
+    assert pngs[0] is not None
     assert plans and not [p for p in plans if _python_nodes(p)], plans
+
+
+def test_feature_info_after_style_swap_runs_no_meta_aggregate(engine, spark):
+    """``Layer.meta()``'s whole-table aggregate runs once per tiles
+    DataFrame, not once per Layer: a style swap over the same tiles
+    keeps GetFeatureInfo at its warm job count."""
+    pts = [(-100.0, 40.0), (10.0, -20.0), (120.0, 5.0)]
+    engine.get_feature_info("plain", pts, Z)
+    warm = _jobs(spark, "feature-info-warm", lambda: engine.get_feature_info("plain", pts, Z))
+    old = engine.layers["plain"]
+    engine.set_layer("plain", Layer("plain", old.tiles, style={"poles": POLES}))
+    try:
+        swapped = _jobs(spark, "feature-info-swapped",
+                        lambda: engine.get_feature_info("plain", pts, Z))
+    finally:
+        engine.set_layer("plain", old)
+    assert swapped == warm, (swapped, warm)
 
 
 def test_halo_strips_equal_with_halo(spark):
