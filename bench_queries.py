@@ -8,8 +8,8 @@ that builds the query's DataFrame. ``bench.py`` times
 
 ``Inputs`` prepares each shared input lazily and once, so a run that
 skips a query builds none of its inputs. The docs table is materialized
-to parquet once per (sf, N) and read back, so measured time is engine
-work (scan → extract → join → key → agg), not synthesis.
+to parquet once per (sf, N, split count) and read back, so measured time
+is engine work (scan → extract → join → key → agg), not synthesis.
 """
 
 from __future__ import annotations
@@ -42,15 +42,18 @@ def sf_of(sf_dir: str) -> float:
 
 
 def materialize_docs(spark, sf_dir: str, n: int) -> str:
-    """Write the synthetic docs table once; subsequent runs read parquet."""
-    path = os.path.join(CACHE_DIR, f"docs_{sf_of(sf_dir)}_{n}_zstd.parquet")
+    """Write the synthetic docs table once; subsequent runs read parquet.
+    The split count is part of the path, so a run with another CPUS never
+    reads a layout written for a different core count."""
+    # 8 splits per core at the widest configuration → several task
+    # waves, so stragglers from external host load amortize. zstd:
+    # measured ~2x faster scans than snappy here (smaller footprint
+    # beats cheaper decompression under memory-bandwidth pressure) —
+    # and it is the standard codec for 100-TB lakes.
+    splits = CPUS * 8
+    path = os.path.join(CACHE_DIR, f"docs_{sf_of(sf_dir)}_{n}_{splits}p_zstd.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # 8 splits per core at the widest configuration → several task
-        # waves, so stragglers from external host load amortize. zstd:
-        # measured ~2x faster scans than snappy here (smaller footprint
-        # beats cheaper decompression under memory-bandwidth pressure) —
-        # and it is the standard codec for 100-TB lakes.
-        synth.docs(spark, n, partitions=CPUS * 8).write.mode("overwrite").option(
+        synth.docs(spark, n, partitions=splits).write.mode("overwrite").option(
             "compression", "zstd"
         ).parquet(path)
     return path
@@ -58,10 +61,12 @@ def materialize_docs(spark, sf_dir: str, n: int) -> str:
 
 def materialize_embeddings(spark, sf_dir: str, n: int, dim: int) -> str:
     """Deterministic synthetic embeddings (hash-fraction coordinates in
-    [-1, 1)) written once; subsequent runs read parquet."""
-    path = os.path.join(CACHE_DIR, f"emb_{sf_of(sf_dir)}_{n}x{dim}.parquet")
+    [-1, 1)) written once, keyed like ``materialize_docs``; subsequent
+    runs read parquet."""
+    splits = CPUS * 4
+    path = os.path.join(CACHE_DIR, f"emb_{sf_of(sf_dir)}_{n}x{dim}_{splits}p.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (spark.range(n, numPartitions=CPUS * 4)
+        (spark.range(n, numPartitions=splits)
          .select(F.col("id").alias("vec_id"),
                  F.expr(f"transform(sequence(0, {dim - 1}), j -> "
                         f"CAST((pmod(xxhash64(id * {dim} + j), 100000)"

@@ -53,18 +53,6 @@ def points_in_ring(lon: np.ndarray, lat: np.ndarray, ring: np.ndarray) -> np.nda
     return inside | on_seg
 
 
-def ring_cells(ring: list[tuple[float, float]], res: int) -> list[int]:
-    """Cells (quadtree, see grids.cells) whose bounds intersect the ring's
-    envelope — the coarse cover used as the join prefilter. Envelope-based:
-    exact filtering happens in the PIP kernel after the equi-join."""
-    from ..grids.layout import tile_key_np
-    import numpy as np
-
-    xs = [p[0] for p in ring]
-    ys = [p[1] for p in ring]
-    return envelope_cells(min(xs), min(ys), max(xs), max(ys), res)
-
-
 def envelope_cells(xmin: float, ymin: float, xmax: float, ymax: float, res: int) -> list[int]:
     """All res-cells intersecting the lon/lat envelope (inclusive bounds)."""
     from ..grids.layout import tile_key_np

@@ -42,11 +42,3 @@ def cell_parent(cell: int, res: int, parent_res: int) -> int:
 
 def cell_key_col(lon_col: str, lat_col: str, res: int) -> Column:
     return F.expr(sqlgen.cell_key_sql(lon_col, lat_col, res))
-
-
-def tile_x_col(lon_col: str, zoom: int) -> Column:
-    return F.expr(sqlgen.tile_x_sql(lon_col, zoom))
-
-
-def tile_y_col(lat_col: str, zoom: int) -> Column:
-    return F.expr(sqlgen.tile_y_sql(lat_col, zoom))

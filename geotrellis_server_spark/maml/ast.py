@@ -197,14 +197,6 @@ def lit(v) -> Expr:
     return Expr.lit(v)
 
 
-def min_(*args) -> Expr:
-    return Expr("min", tuple(_e(a) for a in args))
-
-
-def max_(*args) -> Expr:
-    return Expr("max", tuple(_e(a) for a in args))
-
-
 def ifelse(cond, a, b) -> Expr:
     return Expr("ifelse", (_e(cond), _e(a), _e(b)))
 

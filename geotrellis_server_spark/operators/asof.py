@@ -96,8 +96,7 @@ def sessionize(
     """Gap-based sessionization: rows of one key belong to the same
     session while consecutive gaps are <= ``gap_seconds``; a longer gap
     opens a new session. Adds ``session_id`` (0-based per key, in time
-    order) — the batch form of the session window (Structured
-    Streaming's ``session_window`` is the streaming twin).
+    order) — the batch form of the session window.
 
     Pure window SQL: lag → boundary flag → running sum. One shuffle on
     the key; per-key work is a linear scan in time order."""

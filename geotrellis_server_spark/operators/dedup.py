@@ -445,9 +445,8 @@ def incremental_new_docs(
     """Cross-snapshot incremental dedup: rows of ``new`` whose content
     hash never appeared in ``base``, deduplicated within the new snapshot
     (min-id survivor per hash). Returns (content_hash, survivor_id,
-    n_new). The batch counterpart of streaming/incremental.py's
-    first-seen-per-hash stateful dedup — the same semantics for a
-    snapshot-vs-snapshot ingest instead of a micro-batch stream.
+    n_new): first-seen-per-hash dedup for a snapshot-vs-snapshot
+    ingest.
 
     Scale: the base side collapses to a distinct-hash projection BEFORE
     the join (narrow 32-byte column, map-side partial agg), the new side

@@ -39,10 +39,6 @@ from pyspark.sql import types as T
 _PACK = 1 << 32
 
 
-def _pack_sql(cx: str, cy: str) -> str:
-    return f"({cx}) * {_PACK} + ({cy})"
-
-
 def region_label(
     cells: DataFrame,
     tile: int = 16,

@@ -236,10 +236,6 @@ def with_name(name: str) -> Query:
     return WithName(name)
 
 
-def with_names(names) -> Query:
-    return WithNames(frozenset(names))
-
-
 def nothing() -> Query:
     return Nothing()
 

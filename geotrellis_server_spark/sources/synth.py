@@ -226,19 +226,3 @@ def raster8(spark: SparkSession) -> DataFrame:
     cells = [float(v) for v in range(1, 65)]
     row = ("r8", 0, 0, 0, 0, 8, 8, 0.0, 0.0, 8.0, 8.0, "int32", float("nan"), cells)
     return spark.createDataFrame([row], TILE_SCHEMA)
-
-
-def mosaic_fixture(spark: SparkSession) -> DataFrame:
-    """F6: two overlapping 4×4 single-band sources A (value 1, extent
-    0,0,4,4) and B (value 2, extent 2,0,6,4), with A ranked first.
-    NaN marks NoData: A's right half is NoData in the overlap column x∈[2,4)
-    only for row y∈[2,4) to exercise per-cell (not per-tile) merge."""
-    a_cells = [1.0] * 16
-    b_cells = [2.0] * 16
-    nan = float("nan")
-    a_cells[3] = nan  # one NoData cell in A to let B show through
-    rows = [
-        ("A", 0, 0, 0, 0, 4, 4, 0.0, 0.0, 4.0, 4.0, "float64", nan, a_cells),
-        ("B", 0, 0, 0, 0, 4, 4, 2.0, 0.0, 6.0, 4.0, "float64", nan, b_cells),
-    ]
-    return spark.createDataFrame(rows, TILE_SCHEMA)

@@ -87,17 +87,6 @@ def classify_breaks(
     return out.reshape(v.shape + (4,))
 
 
-def interpolate_ramp(stops: list[tuple[int, int, int, int]], n: int) -> np.ndarray:
-    """Resample a color ramp to n colors (ColorRamp.stops analog)."""
-    stops_a = np.array(stops, dtype=np.float64)
-    xs = np.linspace(0.0, 1.0, len(stops))
-    xq = np.linspace(0.0, 1.0, n)
-    out = np.empty((n, 4))
-    for ch in range(4):
-        out[:, ch] = np.interp(xq, xs, stops_a[:, ch])
-    return np.round(out).astype(np.uint8)
-
-
 def render_rgba(cells: np.ndarray, style=None, **kw) -> np.ndarray:
     """Render dispatch (C5): style is a callable values→RGBA (partial of
     the above); None → greyscale auto-rescale with NoData transparent."""

@@ -57,20 +57,3 @@ def validate_get_tile(z, x, y, max_zoom: int = 30, scheme=None) -> None:
             errs.append(f"tile_y {y} out of [0, {rows}) at zoom {z}")
     if errs:
         raise RequestValidationError(errs)
-
-
-def validate_knn(k, queries) -> None:
-    errs = []
-    if not isinstance(k, int) or k <= 0:
-        errs.append(f"k must be a positive int, got {k!r}")
-    for q in queries:
-        if len(q) != 3:
-            errs.append(f"query must be (id, lon, lat), got {q!r}")
-            continue
-        _, lon, lat = q
-        if not (-180.0 <= lon <= 180.0):
-            errs.append(f"query lon {lon} out of range")
-        if not (-90.0 <= lat <= 90.0):
-            errs.append(f"query lat {lat} out of range")
-    if errs:
-        raise RequestValidationError(errs)

@@ -1,7 +1,6 @@
 """End-to-end training-data pipeline demo over the interleaved docs table:
 
-ingest (docs + media) → text quality filter → exact + near dedup →
-media feature extraction (REAL PNG decode) → geo enrichment (cell keys)
+ingest → text quality filter → exact dedup → geo enrichment (cell keys)
 → train-ready table → density raster → UTM GetMap render → GeoTIFF sink,
 with per-stage metrics.
 
@@ -17,7 +16,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))  # the repo root
 import pyspark.sql.functions as F
 
 from geotrellis_server_spark.grids import cells as C
-from geotrellis_server_spark.operators import dedup, multimodal, text
+from geotrellis_server_spark.operators import dedup, text
 from geotrellis_server_spark.session import get_spark
 from geotrellis_server_spark.sources import synth
 
@@ -51,29 +50,15 @@ def main() -> None:
     )
     deduped = stage("exact_dedup", kept.join(survivors, "doc_id", "left_semi"))
 
-    # 3. media side: fetch + decode (stub) + features
-    media = multimodal.synth_media(spark, docs)
-    feats = stage("media_features", multimodal.extract_features(media, feature_dim=8))
-
-    # 4. geo enrichment + final assembly
+    # 3. geo enrichment + final assembly
     enriched = (
         docs.join(deduped.select("doc_id"), "doc_id", "left_semi")
         .withColumn("cell_r6", C.cell_key_col("lon", "lat", 6))
         .select("doc_id", "spans", "lon", "lat", "cell_r6")
     )
-    media_per_doc = (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .filter("s.kind = 'media'")
-        .select("doc_id", F.col("s.media_ref").alias("media_ref"))
-        .join(feats, "media_ref")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_media"), F.first("feature").alias("media_feature"))
-    )
     train = stage(
         "train_table",
-        enriched.join(media_per_doc, "doc_id", "left").join(
-            texts.select("doc_id", "text"), "doc_id", "left"
-        ),
+        enriched.join(texts.select("doc_id", "text"), "doc_id", "left"),
     )
     out = "/tmp/train_ready.parquet"
     train.write.mode("overwrite").parquet(out)
@@ -81,12 +66,12 @@ def main() -> None:
     print("\nstage            rows    sec")
     for name, n, s in metrics:
         print(f"{name:16s} {n:7d}  {s:5.2f}")
-    sample = train.filter("n_media IS NOT NULL").first()
+    sample = train.first()
     print("\nsample row:", sample.doc_id, "cell:", sample.cell_r6,
-          "n_media:", sample.n_media, "text:", (sample.text or "")[:40])
+          "text:", (sample.text or "")[:40])
     print("wrote", out)
 
-    # 5. round-2 serving tail: rasterize the kept docs, serve a UTM GetMap
+    # 4. serving tail: rasterize the kept docs, serve a UTM GetMap
     #    window, and sink it as a (pure-stdlib) GeoTIFF
     from geotrellis_server_spark.engine import Engine, Layer
     from geotrellis_server_spark.operators import tiling

@@ -142,17 +142,6 @@ def test_jpeg_decoder_rejects_progressive():
         decode_jpeg(bytes(b))
 
 
-def test_jpeg_via_image_decode_path():
-    # multimodal _decode_image: JPEG payloads now decode without Pillow
-    from geotrellis_server_spark.operators.multimodal import _decode_image
-    from geotrellis_server_spark.styles.jpeg import encode_jpeg
-
-    rgb = np.full((16, 16, 3), 77, dtype=np.uint8)
-    arr = _decode_image(encode_jpeg(rgb, 90))
-    assert arr.shape == (16, 16, 3)
-    assert abs(int(arr.mean()) - 77) <= 3
-
-
 def test_jpeg_subsampled_roundtrip_all_modes():
     """4:2:2 / 4:2:0 (the mainstream-encoder default) decode through the
     general MCU loop; bytes shrink monotonically with subsampling."""

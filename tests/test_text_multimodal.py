@@ -1,12 +1,10 @@
-"""Text analysis + multimodal plumbing tests."""
+"""Text analysis tests."""
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from geotrellis_server_spark.operators import multimodal as MM
 from geotrellis_server_spark.operators import text as TX
-from geotrellis_server_spark.sources import synth
 
 
 def test_text_stats_hand_computed(spark):
@@ -46,40 +44,6 @@ def test_fingerprint_normalization(spark):
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
     fp = {r.doc_id: r.fingerprint for r in TX.fingerprint(df).collect()}
     assert fp[1] == fp[2] != fp[3]
-
-
-def test_media_pipeline_deterministic(spark):
-    docs = synth.docs(spark, 300)
-    media = MM.synth_media(spark, docs)
-    rows = media.collect()
-    assert len(rows) > 0
-    assert {r.kind for r in rows} <= {"image", "audio", "video"}
-    # deterministic across runs
-    again = {r.media_ref: bytes(r.payload) for r in MM.synth_media(spark, docs).collect()}
-    for r in rows:
-        assert again[r.media_ref] == bytes(r.payload)
-
-
-def test_feature_extraction_shapes(spark):
-    docs = synth.docs(spark, 200)
-    media = MM.synth_media(spark, docs)
-    feats = MM.extract_features(media, feature_dim=16).collect()
-    assert len(feats) == media.count()
-    for r in feats[:10]:
-        assert len(r.feature) == 16
-        if r.kind == "image":
-            # real PNG payloads are 4-8 px square (synth_media side seed)
-            assert 4 <= r.width <= 8 and r.width == r.height
-
-
-def test_resize_plumbing(spark):
-    docs = synth.docs(spark, 200)
-    media = MM.synth_media(spark, docs)
-    n_img = media.filter("kind = 'image'").count()
-    out = MM.resize_images(media, size=(4, 4)).collect()
-    assert len(out) == n_img
-    for r in out[:5]:
-        assert len(r.pixels) == 4 * 4 * 3
 
 
 def test_png_decoder_all_filters():
@@ -128,63 +92,6 @@ def test_png_decoder_all_filters():
             + _chunk(b"IDAT", zlib.compress(bytes(raw)))
             + _chunk(b"IEND", b""))
     assert (decode_png(data) == img).all()
-
-
-def test_media_image_payloads_are_real_png(spark):
-    import numpy as np
-
-    from geotrellis_server_spark.operators import multimodal as MM
-    from geotrellis_server_spark.sources import synth
-    from geotrellis_server_spark.sources.media_codecs import decode_gif
-    from geotrellis_server_spark.styles.png import decode_png
-
-    docs = synth.docs(spark, 300)
-    media = MM.synth_media(spark, docs)
-    imgs = media.filter("kind = 'image'").limit(8).collect()
-    assert imgs
-    seen = set()
-    for r in imgs:
-        payload = bytes(r.payload)
-        # half the payloads are PNG, half compressed GIF89a — both REAL
-        if payload[:8] == MM.PNG_MAGIC:
-            arr = decode_png(payload)
-            assert r.meta["codec"] == "image/png"
-        else:
-            assert payload[:6] in MM.GIF_MAGICS
-            arr = decode_gif(payload)
-            assert r.meta["codec"] == "image/gif"
-        seen.add(r.meta["codec"])
-        assert arr.ndim == 3 and arr.shape[2] == 3
-    # feature extraction consumes the REAL decoded pixels
-    feats = MM.extract_features(media.filter("kind = 'image'").limit(3)).collect()
-    for f in feats:
-        assert f.width >= 4 and f.height >= 4 and len(f.feature) == 16
-
-
-def test_video_frame_sampling(spark):
-    from geotrellis_server_spark.operators import multimodal as MM
-    from geotrellis_server_spark.sources import synth
-
-    media = MM.synth_media(spark, synth.docs(spark, 400))
-    vids = media.filter("kind = 'video'")
-    assert vids.count() > 0
-    frames = MM.sample_frames(vids, n_frames=3).collect()
-    by_ref = {}
-    for r in frames:
-        by_ref.setdefault(r.media_ref, []).append(r)
-    for ref, rows in by_ref.items():
-        assert 1 <= len(rows) <= 3
-        nos = [r.frame_no for r in rows]
-        assert nos == sorted(nos) and nos[0] == 0  # evenly spaced from 0
-        assert all(r.frame_no < r.n_frames_total for r in rows)
-        # real decode paths: synth Y4M frames are 4x4 luma planes,
-        # synth MJPEG-AVI frames 8x8
-        assert all(len(r.pixels) in (4 * 4, 8 * 8) for r in rows)
-    # determinism: same payload → same frames
-    again = {(r.media_ref, r.frame_no): list(r.pixels)
-             for r in MM.sample_frames(vids, n_frames=3).collect()}
-    for r in frames:
-        assert again[(r.media_ref, r.frame_no)] == list(r.pixels)
 
 
 def test_chunk_documents_windows(spark):
@@ -258,65 +165,6 @@ def test_stratified_sample_deterministic(spark):
     # no shuffle
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_image_dhash_and_near_dup_pairs(spark):
-    # real PNG path: encode deterministic images, perturb brightness
-    # slightly -> dhash must match within a few bits; a structurally
-    # different image must be far
-    import numpy as np
-
-    from geotrellis_server_spark.operators import multimodal as MM
-    from geotrellis_server_spark.styles.png import encode_png
-
-    rng = np.random.default_rng(9)
-    base = rng.integers(0, 200, (16, 16, 3)).astype(np.uint8)
-    bright = np.clip(base.astype(np.int32) + 3, 0, 255).astype(np.uint8)
-    other = rng.integers(0, 255, (16, 16, 3)).astype(np.uint8)
-    rows = [
-        ("img-a", "image", bytearray(encode_png(base)), {}),
-        ("img-b", "image", bytearray(encode_png(bright)), {}),
-        ("img-c", "image", bytearray(encode_png(other)), {}),
-        ("aud-x", "audio", bytearray(b"\x00" * 32), {}),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    hashes = {r.media_ref: r.dhash for r in MM.image_dhash(media).collect()}
-    assert set(hashes) == {"img-a", "img-b", "img-c"}  # audio skipped
-    assert len(hashes["img-a"]) == 64 and set(hashes["img-a"]) <= {"0", "1"}
-    ham_ab = sum(x != y for x, y in zip(hashes["img-a"], hashes["img-b"]))
-    ham_ac = sum(x != y for x, y in zip(hashes["img-a"], hashes["img-c"]))
-    assert ham_ab <= 4 < ham_ac
-    pairs = {(r.a, r.b): r.hamming
-             for r in MM.image_near_dup_pairs(media, max_hamming=4).collect()}
-    assert ("img-a", "img-b") in pairs and pairs[("img-a", "img-b")] == ham_ab
-    assert all({a, b} != {"img-a", "img-c"} for a, b in pairs)
-
-
-def test_image_near_dup_completeness_vs_bruteforce(spark):
-    # banded LSH must find EVERY pair within the Hamming budget (pigeonhole
-    # completeness) on a corpus of clustered synthetic images
-    import numpy as np
-
-    from geotrellis_server_spark.operators import multimodal as MM
-    from geotrellis_server_spark.styles.png import encode_png
-
-    rng = np.random.default_rng(4)
-    rows = []
-    for c in range(6):
-        proto = rng.integers(0, 220, (12, 12, 3)).astype(np.int32)
-        for j in range(4):
-            img = np.clip(proto + rng.integers(-2, 3, proto.shape), 0, 255).astype(np.uint8)
-            rows.append((f"m{c}-{j}", "image", bytearray(encode_png(img)), {}))
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    hashes = {r.media_ref: r.dhash for r in MM.image_dhash(media).collect()}
-    ids = sorted(hashes)
-    expected = set()
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            if sum(x != y for x, y in zip(hashes[a], hashes[b])) <= 6:
-                expected.add((a, b))
-    got = {(r.a, r.b) for r in MM.image_near_dup_pairs(media, max_hamming=6).collect()}
-    assert got == expected and expected
 
 
 def test_redact_pii(spark):
@@ -431,31 +279,6 @@ def test_extract_urls_and_blocklist(spark):
     assert kept == {2}
 
 
-def test_png_header_meta_sql_only(spark):
-    import numpy as np
-
-    from geotrellis_server_spark.operators.multimodal import png_header_meta
-    from geotrellis_server_spark.styles.png import encode_png
-
-    grey = (np.arange(20 * 13, dtype=np.uint8) % 251).reshape(20, 13)
-    rgba = np.zeros((5, 7, 4), dtype=np.uint8)
-    rows = [
-        (1, bytearray(encode_png(grey))),
-        (2, bytearray(encode_png(rgba))),
-        (3, bytearray(b"not a png at all, just bytes")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id BIGINT, payload BINARY")
-    got = {r.doc_id: r for r in png_header_meta(df).collect()}
-    assert got[1].is_png and (got[1].width, got[1].height) == (13, 20)
-    assert got[1].bit_depth == 8
-    assert got[2].is_png and (got[2].width, got[2].height) == (7, 5)
-    assert got[2].color_type == 6  # RGBA
-    assert not got[3].is_png and got[3].width is None
-    # plan stays in codegen — no Python eval
-    plan = png_header_meta(df)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_pack_sequences_randomized_against_reference(spark):
     """Seeded random corpora run through the PRODUCTION pack_sequences;
     per-packer output must equal an independent next-fit reference and
@@ -495,244 +318,6 @@ def test_pack_sequences_randomized_against_reference(spark):
         fill.setdefault((r.packer, r.bin_id), []).append(r.ws_tokens)
     for toks in fill.values():
         assert sum(toks) <= capacity or len(toks) == 1
-
-
-def test_wav_roundtrip_and_real_audio_decode():
-    import numpy as np
-
-    from geotrellis_server_spark.operators.multimodal import _decode_audio
-    from geotrellis_server_spark.sources.media_codecs import decode_wav, encode_wav
-
-    t = np.arange(500, dtype=np.float64)
-    wave = 0.6 * np.sin(t * 0.1)
-    payload = encode_wav(wave, sample_rate=16000)
-    back, rate = decode_wav(payload)
-    assert rate == 16000 and back.shape == (500,)
-    assert np.abs(back - wave).max() < 1.0 / 32767 + 1e-6  # PCM16 quantization
-    # the engine decoder takes the REAL path (matches the codec output)
-    via_engine = _decode_audio(payload)
-    np.testing.assert_array_equal(via_engine, back)
-    # stereo
-    st = np.stack([wave, -wave], axis=1)
-    b2, _ = decode_wav(encode_wav(st))
-    assert b2.shape == (500, 2)
-    np.testing.assert_allclose(b2[:, 0], -b2[:, 1], atol=2.0 / 32767)
-
-
-def test_y4m_roundtrip_info_and_frame_seek():
-    import numpy as np
-
-    from geotrellis_server_spark.sources.media_codecs import (
-        decode_y4m_frame,
-        encode_y4m,
-        y4m_info,
-    )
-
-    frames = (np.arange(5 * 6 * 8, dtype=np.uint8) % 201).reshape(5, 6, 8)
-    payload = encode_y4m(frames, fps=(30, 1))
-    assert y4m_info(payload) == (8, 6, 5)
-    for i in (0, 2, 4):
-        np.testing.assert_array_equal(decode_y4m_frame(payload, i), frames[i])
-
-
-def test_sample_frames_real_y4m_demux(spark):
-    import numpy as np
-
-    from geotrellis_server_spark.operators.multimodal import sample_frames
-    from geotrellis_server_spark.sources.media_codecs import encode_y4m
-
-    frames = (np.arange(9 * 4 * 4, dtype=np.uint8) % 97).reshape(9, 4, 4)
-    media = spark.createDataFrame(
-        [("v1", "video", bytearray(encode_y4m(frames)), {})],
-        "media_ref STRING, kind STRING, payload BINARY, meta MAP<STRING,STRING>",
-    )
-    rows = {r.frame_no: r for r in sample_frames(media, n_frames=3).collect()}
-    assert set(rows) == {0, 4, 8}  # evenly spaced over the REAL frame count
-    for fno, r in rows.items():
-        assert r.n_frames_total == 9
-        np.testing.assert_array_equal(
-            np.array(r.pixels, dtype=np.uint8).reshape(4, 4), frames[fno]
-        )
-
-
-def test_synth_media_payloads_are_real_codecs(spark):
-    from geotrellis_server_spark.operators.multimodal import synth_media
-    from geotrellis_server_spark.sources import synth
-
-    media = synth_media(spark, synth.docs(spark, 300)).collect()
-    kinds = {r.kind for r in media}
-    assert kinds == {"image", "audio", "video"}
-    for r in media:
-        p = bytes(r.payload)
-        if r.kind == "image":
-            assert (p[:8] == b"\x89PNG\r\n\x1a\n" or p[:6] == b"GIF89a")
-            assert r.meta["codec"] in ("image/png", "image/gif")
-        elif r.kind == "audio":
-            assert p[:4] in (b"RIFF", b"fLaC")
-            assert r.meta["codec"] in (
-                "audio/wav", "audio/adpcm", "audio/flac",
-                "audio/g711-ulaw", "audio/g711-alaw")
-        elif r.meta["codec"] == "video/y4m":
-            assert p.startswith(b"YUV4MPEG2 ")
-        else:
-            assert p[:4] == b"RIFF" and p[8:12] == b"AVI "
-            assert r.meta["codec"] == "video/x-motion-jpeg"
-    codecs = {r.meta["codec"] for r in media}
-    assert {"video/y4m", "video/x-motion-jpeg"} <= codecs  # both video paths
-    assert {"audio/wav", "audio/adpcm", "audio/flac",
-            "audio/g711-ulaw", "audio/g711-alaw"} <= codecs  # all audio paths
-    assert {"image/png", "image/gif"} <= codecs  # both image paths
-
-
-def test_g711_roundtrip_and_decode_path():
-    import numpy as np
-
-    from geotrellis_server_spark.operators.multimodal import _decode_audio
-    from geotrellis_server_spark.sources.media_codecs import (
-        _G711_TABLES,
-        decode_wav_g711,
-        encode_wav_g711,
-    )
-
-    t = np.arange(4000, dtype=np.float64)
-    wave = 0.7 * np.sin(t * 0.07)
-    for law in ("ulaw", "alaw"):
-        payload = encode_wav_g711(wave, 8000, law)
-        back, rate = decode_wav_g711(payload)
-        assert rate == 8000 and back.shape == (4000,)
-        err = back - wave.astype(np.float32)
-        snr = 10 * np.log10(np.mean(wave ** 2) / np.mean(err ** 2))
-        assert snr > 30  # G.711 companding gives ~38 dB on a loud sine
-        # engine decode path reaches the real G.711 branch
-        np.testing.assert_array_equal(_decode_audio(payload), back)
-        # every decode level is a fixed point of the nearest-code encoder
-        from geotrellis_server_spark.sources.media_codecs import (
-            _g711_encode_samples)
-
-        tab = _G711_TABLES[law]
-        assert np.array_equal(
-            tab[_g711_encode_samples(tab.astype(np.int32), law)], tab)
-    assert _G711_TABLES["ulaw"][0xFF] == 0  # published anchor: 0xFF → 0
-
-
-def test_gif_roundtrip_lossless():
-    import numpy as np
-
-    from geotrellis_server_spark.sources.media_codecs import (
-        decode_gif,
-        encode_gif,
-    )
-
-    rng = np.random.default_rng(11)
-    pal = rng.integers(0, 256, (12, 3), dtype=np.uint8)
-    img = pal[rng.integers(0, 12, (17, 33))]
-    assert np.array_equal(decode_gif(encode_gif(img)), img)
-    # interlaced encoding decodes to the same pixels
-    assert np.array_equal(decode_gif(encode_gif(img, interlace=True)), img)
-    # 256-color noise big enough to overflow the 12-bit code space:
-    # exercises width growth to 12 bits AND mid-stream clear-code resets
-    pal256 = np.array(
-        [[i, (i * 7) % 256, (i * 13) % 256] for i in range(256)], dtype=np.uint8)
-    big = pal256[rng.integers(0, 256, (120, 150))]
-    assert np.array_equal(decode_gif(encode_gif(big)), big)
-    # degenerate shapes
-    one = np.full((1, 1, 3), 9, np.uint8)
-    assert np.array_equal(decode_gif(encode_gif(one)), one)
-    # GIF is indexed: >256 distinct colors must be rejected, not mangled
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="256"):
-        encode_gif(rng.integers(0, 256, (40, 40, 3), dtype=np.uint8))
-
-
-def test_gif_real_decode_path_in_engine():
-    import numpy as np
-
-    from geotrellis_server_spark.operators.multimodal import _decode_image
-    from geotrellis_server_spark.sources.media_codecs import encode_gif
-
-    pal = np.array([[250, 1, 2], [3, 240, 5], [6, 7, 230]], dtype=np.uint8)
-    img = pal[(np.arange(64) % 3).reshape(8, 8)]
-    out = _decode_image(encode_gif(img))
-    np.testing.assert_array_equal(out, img)  # real decode, not the stub
-
-
-def test_mjpeg_avi_roundtrip():
-    """MJPEG AVI: a COMPRESSED video format, real both ways with zero
-    external codec libs (RIFF demux + in-house T.81 JPEG)."""
-    import numpy as np
-
-    from geotrellis_server_spark.sources.media_codecs import (
-        avi_frame_jpeg,
-        avi_info,
-        decode_avi_frame,
-        encode_mjpeg_avi,
-    )
-
-    rng = np.random.default_rng(11)
-    # smooth-ish frames: JPEG at q=90 should round-trip with high PSNR
-    base = np.clip(
-        128 + 60 * np.sin(np.arange(24)[:, None] * 0.3)
-        + 40 * np.cos(np.arange(32)[None, :] * 0.2), 0, 255)
-    frames = np.stack([np.clip(base + 3 * t, 0, 255) for t in range(6)])
-    frames = frames.astype(np.uint8)
-    avi = encode_mjpeg_avi(frames, fps=30, quality=90)
-    assert avi_info(avi) == (32, 24, 6)
-    for i in (0, 3, 5):
-        jpg = avi_frame_jpeg(avi, i)
-        assert jpg[:2] == b"\xff\xd8" and jpg[-2:] == b"\xff\xd9"
-        dec = decode_avi_frame(avi, i).astype(np.float64)
-        mse = np.mean((dec - frames[i]) ** 2)
-        psnr = 10 * np.log10(255.0**2 / max(mse, 1e-9))
-        assert psnr > 30.0, psnr
-
-
-def test_sample_frames_real_mjpeg_avi(spark):
-    import numpy as np
-
-    from geotrellis_server_spark.operators.multimodal import sample_frames
-    from geotrellis_server_spark.sources.media_codecs import encode_mjpeg_avi
-
-    frames = np.stack([
-        np.full((8, 8), 40 + 25 * t, dtype=np.uint8) for t in range(7)
-    ])
-    media = spark.createDataFrame(
-        [("a1", "video", bytearray(encode_mjpeg_avi(frames)), {})],
-        "media_ref STRING, kind STRING, payload BINARY, meta MAP<STRING,STRING>",
-    )
-    rows = {r.frame_no: r for r in sample_frames(media, n_frames=3).collect()}
-    assert set(rows) == {0, 3, 6}  # evenly spaced over the REAL count
-    for fno, r in rows.items():
-        assert r.n_frames_total == 7
-        got = np.array(r.pixels, dtype=np.float64)
-        # flat frames survive JPEG almost exactly
-        assert abs(got.mean() - (40 + 25 * fno)) < 2.0
-
-
-def test_ima_adpcm_roundtrip_and_decode_path():
-    """IMA ADPCM: a COMPRESSED audio format real both ways (4-bit,
-    ~4x smaller than PCM16, zero external libs)."""
-    import numpy as np
-
-    from geotrellis_server_spark.operators.multimodal import _decode_audio
-    from geotrellis_server_spark.sources.media_codecs import (
-        decode_wav_adpcm,
-        encode_wav,
-        encode_wav_adpcm,
-    )
-
-    t = np.arange(5000, dtype=np.float64)
-    wave = 0.6 * np.sin(t * 0.07) + 0.25 * np.sin(t * 0.19)
-    blob = encode_wav_adpcm(wave, sample_rate=8000)
-    assert len(blob) < len(encode_wav(wave)) / 3  # genuinely compressed
-    dec, rate = decode_wav_adpcm(blob)
-    assert rate == 8000 and len(dec) == 5000
-    err = dec.astype(np.float64) - wave
-    snr = 10 * np.log10(np.mean(wave**2) / np.mean(err**2))
-    assert snr > 25.0, snr  # near-transparent for smooth tones
-    # the multimodal decode dispatcher picks the ADPCM path by fmt tag
-    via_dispatch = _decode_audio(blob)
-    assert np.allclose(via_dispatch, dec)
 
 
 def test_top_k_per_group_matches_plain_window(spark):
@@ -965,31 +550,6 @@ def test_ngram_lm_logprob(spark):
     assert a == b
 
 
-def test_alaw_table_matches_itu_reference():
-    """A-law decode must equal the ITU/Sun alaw2linear reference for all
-    256 codes (review r5: an extra <<3 scaled 8x and wrapped int16)."""
-    import numpy as np
-    from geotrellis_server_spark.sources.media_codecs import \
-        _alaw_decode_table
-
-    def sun_alaw2linear(a):
-        a ^= 0x55
-        t = (a & 0x0F) << 4
-        seg = (a & 0x70) >> 4
-        if seg == 0:
-            t += 8
-        elif seg == 1:
-            t += 0x108
-        else:
-            t = (t + 0x108) << (seg - 1)
-        return t if (a & 0x80) else -t
-
-    tab = _alaw_decode_table()
-    ref = np.array([sun_alaw2linear(c) for c in range(256)], dtype=np.int16)
-    assert (tab == ref).all()
-    assert tab[0xD5] == 8 and tab[0xAA] == 32256
-
-
 def test_top_k_per_group_null_order_ascending(spark):
     """Ascending order: Spark ranks NULL order values FIRST; the
     batch-local prune must agree or NULL rows get dropped (review r5)."""
@@ -1051,62 +611,6 @@ def _mk_h264():
             + b"\x00\x00\x01" + bytes([0x68]) + b"\x33"
             + b"\x00\x00\x00\x01" + bytes([0x65]) + b"\xAA\xBB"
             + b"\x00\x00\x01" + bytes([0x41]) + b"\xDD")
-
-
-def test_compressed_demux_layers():
-    from geotrellis_server_spark.sources.media_codecs import (
-        aac_adts_frames, h264_nal_units, mp3_frames)
-
-    m = mp3_frames(_mk_mp3())
-    assert (m["sample_rate"], m["channels"], m["layer"],
-            m["n_frames"]) == (44100, 1, 3, 3)
-    a = aac_adts_frames(_mk_adts())
-    assert (a["sample_rate"], a["channels"], a["profile"],
-            a["n_frames"]) == (48000, 2, 2, 2)
-    u = h264_nal_units(_mk_h264())
-    assert [x["name"] for x in u] == ["sps", "pps", "idr", "slice"]
-    assert sum(x["keyframe"] for x in u) == 1
-    with pytest.raises(ValueError):
-        mp3_frames(b"\x00" * 64)
-
-
-def test_media_probe(spark):
-    """ffprobe-style metadata over the full codec inventory, including
-    the real synth payloads and the compressed demux layers."""
-    from geotrellis_server_spark.operators.multimodal import (media_probe,
-                                                              synth_media)
-    from geotrellis_server_spark.sources.synth import docs as synth_docs
-
-    media = synth_media(spark, synth_docs(spark, 60))
-    extra = spark.createDataFrame(
-        [("x-mp3", bytearray(_mk_mp3())),
-         ("x-aac", bytearray(_mk_adts())),
-         ("x-h264", bytearray(_mk_h264())),
-         ("x-junk", bytearray(b"total garbage not a codec"))],
-        "media_ref string, payload binary")
-    probed = media_probe(
-        media.select("media_ref", "payload").unionByName(extra))
-    rows = probed.collect()
-    by_codec = {}
-    for r in rows:
-        by_codec.setdefault(r.codec, []).append(r)
-    # synth corpus covers image + audio + video payloads
-    assert {"png", "wav-pcm16"} <= set(by_codec)
-    assert any(c.startswith("wav-") or c == "flac" for c in by_codec)
-    mp3 = next(r for r in rows if r.media_ref == "x-mp3")
-    assert mp3.codec == "mpeg1-layer3" and mp3.sample_rate == 44100
-    assert abs(mp3.duration_s - 3 * 1152 / 44100) < 1e-9
-    aac = next(r for r in rows if r.media_ref == "x-aac")
-    assert aac.codec == "aac-adts" and aac.n_frames == 2
-    h264 = next(r for r in rows if r.media_ref == "x-h264")
-    assert h264.codec == "h264-annexb" and h264.n_keyframes == 1
-    assert next(r for r in rows if r.media_ref == "x-junk").codec == "unknown"
-    # every audio/video payload got a real duration or frame count
-    for r in rows:
-        if r.codec.startswith(("wav-", "flac", "mpeg1", "aac")):
-            assert r.duration_s is not None and r.duration_s > 0
-        if r.codec in ("y4m", "mjpeg-avi"):
-            assert r.n_frames and r.width and r.height
 
 
 def test_tfidf_top_terms(spark):
@@ -1338,76 +842,6 @@ def test_c4_line_rules_no_kept_lines_md5_empty(spark):
     out = c4_line_rules(df).collect()[0]
     assert out.n_kept == 0 and not out.keep
     assert out.clean_md5 == hashlib.md5(b"").hexdigest()
-
-
-def test_phash_invariance_and_discrimination(spark):
-    """pHash of a real PNG round-trip: noise-perturbed copies hash
-    close, structurally different images hash far."""
-    import numpy as np
-
-    from geotrellis_server_spark.operators import multimodal as MM
-    from geotrellis_server_spark.styles.png import encode_png
-
-    rng = np.random.default_rng(3)
-    base = np.zeros((64, 64, 4), dtype=np.uint8)
-    base[..., 3] = 255
-    base[16:48, 8:56, 0] = 200         # red block
-    base[8:24, 40:60, 1] = 180         # green block
-    noisy = base.copy()
-    noisy[..., :3] = np.clip(
-        noisy[..., :3].astype(int) + rng.integers(-6, 7, noisy[..., :3].shape),
-        0, 255).astype(np.uint8)
-    other = np.zeros((64, 64, 4), dtype=np.uint8)
-    other[..., 3] = 255
-    other[::2, :, 2] = 255             # horizontal stripes
-    h_base = MM.phash64(MM._decode_image(encode_png(base)))
-    h_noisy = MM.phash64(MM._decode_image(encode_png(noisy)))
-    h_other = MM.phash64(MM._decode_image(encode_png(other)))
-    d = lambda a, b: bin(a ^ b).count("1")
-    assert d(h_base, h_noisy) <= 6
-    assert d(h_base, h_other) >= 20
-
-
-def test_phash_near_pairs_banded_exhaustive(spark):
-    from geotrellis_server_spark.operators import multimodal as MM
-
-    rows = [
-        ("a", 0x0123456789ABCDEF),
-        ("b", 0x0123456789ABCDED),  # hamming 1 from a
-        ("c", 0x0123456789ABCD00),  # hamming ~5 from a
-        ("d", -0x7FFFFFFFFFFFFFF0),  # far from everything
-    ]
-    df = spark.createDataFrame(
-        [(r, h if h < 1 << 63 else h - (1 << 64)) for r, h in rows],
-        "media_ref string, phash long")
-    out = {(r.ref_a, r.ref_b): r.hamming
-           for r in MM.phash_near_pairs(df, max_hamming=3).collect()}
-    assert out == {("a", "b"): 1}
-    # k=6 with 8 bands still exhaustive: catches the hamming-5 pair too
-    out2 = {(r.ref_a, r.ref_b): r.hamming
-            for r in MM.phash_near_pairs(df, max_hamming=6,
-                                         n_bands=8).collect()}
-    # a↔c is hamming 7 (popcount 0xEF) — correctly OUT at k=6;
-    # b↔c is hamming 6 (popcount 0xED) — in
-    assert out2 == {("a", "b"): 1, ("b", "c"): 6}
-
-
-def test_media_phash_spark_path(spark):
-    import numpy as np
-
-    from geotrellis_server_spark.operators import multimodal as MM
-    from geotrellis_server_spark.styles.png import encode_png
-
-    img = np.zeros((16, 16, 4), dtype=np.uint8)
-    img[..., 3] = 255
-    img[4:12, 4:12, 0] = 255
-    payload = encode_png(img)
-    df = spark.createDataFrame([("m1", bytearray(payload))],
-                               "media_ref string, payload binary")
-    out = MM.media_phash(df).collect()
-    want = MM.phash64(MM._decode_image(payload))
-    got = out[0].phash % (1 << 64)
-    assert got == want and out[0].media_ref == "m1"
 
 
 def test_fineweb_rules_battery(spark):
